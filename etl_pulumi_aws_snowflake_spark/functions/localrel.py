@@ -4,9 +4,8 @@
 ``applySchemaToPythonRDD`` — a pickled Python RDD whose plan node is
 ``Scan ExistingRDD``.  EVERY execution of a plan containing that node
 round-trips through Python workers: measured ~0.5 s per action for a
-40-row frame on this host (scripts/ab_ivf_seed_frame.py — the r18
-``sim_ivf_topk`` serve regression, VERDICT r18 #1, was exactly this
-cost).  The pandas/Arrow construction path instead lands a pure JVM
+40-row frame on this host (VERDICT r18 #1 — the r18
+``sim_ivf_topk`` serve regression was exactly this cost).  The pandas/Arrow construction path instead lands a pure JVM
 ``LocalTableScan`` (~0.06 s per action for the same frame): no Python
 at execution, broadcast-able without a job, constant-foldable.
 
@@ -40,7 +39,11 @@ def local_frame(spark, rows: Sequence, schema) -> DataFrame:
     emptiness never can.
     """
     import pandas as pd
+    from pyspark.sql import types as T
 
+    # ONE DDL parser (Spark's own): column names, quoting and nested
+    # types all come from the parsed StructType
+    dt = T._parse_datatype_string(schema) if isinstance(schema, str) else schema
     if not len(rows):
         # Spark's Arrow conversion skips EMPTY pandas frames (falling
         # back to the RDD path), so build the empty relation through
@@ -49,13 +52,6 @@ def local_frame(spark, rows: Sequence, schema) -> DataFrame:
         # reject nullable→non-nullable), statically prunable by
         # PropagateEmptyRelation.  Any py4j surprise falls back to the
         # classic (RDD-backed) spelling, which is merely slower.
-        from pyspark.sql import types as T
-
-        dt = (
-            T._parse_datatype_string(schema)
-            if isinstance(schema, str)
-            else schema
-        )
         try:
             jvm = spark._jvm
             jschema = jvm.org.apache.spark.sql.types.DataType.fromJson(
@@ -68,36 +64,10 @@ def local_frame(spark, rows: Sequence, schema) -> DataFrame:
         except Exception:
             return spark.createDataFrame([], dt)
 
-    if isinstance(schema, str):
-        names = [f.split()[0] for f in _split_fields(schema)]
-    else:
-        names = list(schema.names)
+    names = dt.names
     data = {
         name: pd.Series([r[i] for r in rows], dtype=object)
         for i, name in enumerate(names)
     }
     pdf = pd.DataFrame(data, columns=names)
-    return spark.createDataFrame(pdf, schema)
-
-
-def _split_fields(schema: str) -> list[str]:
-    """Split a DDL schema string on TOP-LEVEL commas only (nested
-    ``array<...>`` / ``struct<...>`` / ``decimal(...)`` commas stay
-    put)."""
-    fields: list[str] = []
-    depth = 0
-    cur = []
-    for ch in schema:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            fields.append("".join(cur).strip())
-            cur = []
-            continue
-        cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        fields.append(tail)
-    return fields
+    return spark.createDataFrame(pdf, dt)

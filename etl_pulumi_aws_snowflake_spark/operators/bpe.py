@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import tracked_local_checkpoint
+
 __all__ = ["word_counts", "train_bpe", "bpe_token_counts"]
 
 DEFAULT_MAX_WORD_LEN = 16
@@ -286,7 +288,10 @@ def train_bpe(
                 # never wanted (the cache IS the state), and without it
                 # the plan grows one projection layer per pass.  Eager
                 # = a job, so the parent releases immediately after.
-                nxt = stepped.localCheckpoint(eager=True)
+                # Tracked: a checkpoint's raw-RDD storage is invisible
+                # to ``unpersist`` and would otherwise stay until a JVM
+                # GC happens to collect it.
+                nxt = tracked_local_checkpoint(stepped)
                 wc.unpersist()
                 wc = nxt
             else:

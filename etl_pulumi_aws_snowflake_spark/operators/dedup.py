@@ -891,38 +891,38 @@ def lsh_index_append(
     :func:`lsh_index_delete` (id-only, pruned, property-tested equal
     to never-ingested) followed by appending the new text, the same
     two-step as :func:`ivf_index_append` re-embedding."""
-    import os
-
-    from .warehouse import merge_upsert_pruned
-
-    spark = new_docs.sparkSession
-    k, num_hashes, bands, n_buckets = _lsh_meta(spark, root, fs)
+    meta = _lsh_meta(new_docs.sparkSession, root, fs)
+    k, _, _, n_buckets = meta
     nsets = deferred_persist(
         shingle_sets(new_docs, k, text_col, id_col).filter(F.col("n_shingles") > 0)
     )
-    merge_upsert_pruned(
-        spark,
-        os.path.join(root, "sets"),
+    return _lsh_mutate(
         nsets.withColumn("dbucket", F.pmod(F.col(id_col), F.lit(n_buckets))),
-        key=[id_col],
-        partition_col="dbucket",
-        fs=fs,
+        root, id_col, meta, fs, delete=False,
     )
-    nbanded = _banded_keys(nsets, num_hashes, bands, id_col).withColumn(
+
+
+def _lsh_mutate(
+    sets: DataFrame, root: str, id_col: str, meta: tuple, fs, delete: bool
+) -> str:
+    """The LSH append/delete router: ``sets`` rows (carrying their
+    ``dbucket``) are banded with the frozen ``meta`` parameters, then
+    ONE :func:`~..streaming.snapshot.index_mutate` pruned-MERGEs sets
+    first, bands second, and republishes the meta/sets/bands trio.
+    Returns the new bands version."""
+    from ..streaming.snapshot import index_mutate
+
+    _, num_hashes, bands, n_buckets = meta
+    banded = _banded_keys(sets, num_hashes, bands, id_col).withColumn(
         "bucket", F.pmod(F.col("key"), F.lit(n_buckets))
     )
-    version = merge_upsert_pruned(
-        spark,
-        os.path.join(root, "bands"),
-        nbanded,
-        key=[id_col, "band"],
-        partition_col="bucket",
-        fs=fs,
-    )
-    from ..streaming.snapshot import index_republish
-
-    index_republish(root, ("meta", "sets", "bands"), fs=fs)
-    return version
+    members = {
+        "sets": (sets, [id_col], "dbucket"),
+        "bands": (banded, [id_col, "band"], "bucket"),
+    }
+    return index_mutate(
+        root, members, ("meta", "sets", "bands"), delete=delete, fs=fs
+    )["bands"]
 
 
 def lsh_index_delete(
@@ -952,10 +952,10 @@ def lsh_index_delete(
     import os
 
     from ..streaming.snapshot import snapshot_read
-    from .warehouse import merge_upsert_pruned
 
     spark = doc_ids.sparkSession
-    k, num_hashes, bands, n_buckets = _lsh_meta(spark, root, fs)
+    meta = _lsh_meta(spark, root, fs)
+    *_, n_buckets = meta
     ids = deferred_persist(
         doc_ids.select(id_col).distinct().withColumn(
             "dbucket", F.pmod(F.col(id_col), F.lit(n_buckets))
@@ -974,28 +974,4 @@ def lsh_index_delete(
     dsets = deferred_persist(
         stored.join(ids.select(id_col), id_col, "semi")
     )
-    merge_upsert_pruned(
-        spark,
-        os.path.join(root, "sets"),
-        dsets.withColumn("_del", F.lit(True)),
-        key=[id_col],
-        partition_col="dbucket",
-        delete_col="_del",
-        fs=fs,
-    )
-    dbanded = _banded_keys(dsets, num_hashes, bands, id_col).withColumn(
-        "bucket", F.pmod(F.col("key"), F.lit(n_buckets))
-    )
-    version = merge_upsert_pruned(
-        spark,
-        os.path.join(root, "bands"),
-        dbanded.withColumn("_del", F.lit(True)),
-        key=[id_col, "band"],
-        partition_col="bucket",
-        delete_col="_del",
-        fs=fs,
-    )
-    from ..streaming.snapshot import index_republish
-
-    index_republish(root, ("meta", "sets", "bands"), fs=fs)
-    return version
+    return _lsh_mutate(dsets, root, id_col, meta, fs, delete=True)

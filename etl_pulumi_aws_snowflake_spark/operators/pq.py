@@ -59,11 +59,11 @@ from ..functions.localrel import local_frame
 from .similarity import (
     ARROW_SCORE_MIN_ROUTED,
     MAX_RERANK_IDS,
+    _ivf_mutate,
     _prep,
     _route_probes,
     _routed_lists,
     _seeds_assigned_once,
-    ivf_assign,
     seed_rank_hash,
 )
 
@@ -953,53 +953,7 @@ def ivf_index_append_pq(new_rows: DataFrame, root: str, fs=None) -> str:
     MERGE into the PQ corpus; a rerank-enabled index merges its float
     payload in lockstep.  Same list-stability contract as every IVF
     append.  Returns the new PQ-corpus version."""
-    from ..streaming.snapshot import index_current, index_republish, snapshot_read
-    from .similarity import _frozen_seeds
-    from .warehouse import merge_upsert_pruned
-
-    spark = new_rows.sparkSession
-    pin = index_current(root, fs=fs) or {}
-    cent = _frozen_seeds(spark, root, fs, "append")
-    m, codes, sd, residual = _pq_meta(spark, root, fs, pin)
-    cb = snapshot_read(
-        spark,
-        os.path.join(root, "pq_codebooks"),
-        fs=fs,
-        version=pin.get("pq_codebooks"),
-    )
-    assigned = ivf_assign(new_rows, centroids=cent)
-    enc_col = "v"
-    if residual:
-        # residualize against the PINNED seeds — encoding stays the
-        # same pure per-vector function the build used, so
-        # append-then-serve equals rebuild-over-the-union
-        seeds = snapshot_read(
-            spark, os.path.join(root, "seeds"), fs=fs, version=pin.get("seeds")
-        )
-        assigned = _residualize(assigned, seeds)
-        enc_col = "rv"
-    members = ["seeds", "pq_meta", "pq_codebooks", "corpus_pq"]
-    if pin and "corpus" in pin:
-        members.append("corpus")
-        assigned = deferred_persist(assigned)
-        merge_upsert_pruned(
-            spark,
-            os.path.join(root, "corpus"),
-            assigned.select("vec_id", "v", "nrm", "list_id"),
-            key=["vec_id"],
-            partition_col="list_id",
-            fs=fs,
-        )
-    version = merge_upsert_pruned(
-        spark,
-        os.path.join(root, "corpus_pq"),
-        pq_encode(assigned, cb, m, codes, sub_dim=sd, vec_col=enc_col),
-        key=["vec_id"],
-        partition_col="list_id",
-        fs=fs,
-    )
-    index_republish(root, members, fs=fs)
-    return version
+    return _pq_mutate(new_rows, root, fs, delete=False)
 
 
 def ivf_index_delete_pq(rows: DataFrame, root: str, fs=None) -> str:
@@ -1007,13 +961,19 @@ def ivf_index_delete_pq(rows: DataFrame, root: str, fs=None) -> str:
     frozen-seed routing to the holding lists, pruned MERGE with a
     delete flag on the PQ payload (and the float payload in lockstep
     on a rerank build).  Returns the new PQ-corpus version."""
-    from ..streaming.snapshot import index_current, index_republish, snapshot_read
-    from .similarity import _frozen_seeds
-    from .warehouse import merge_upsert_pruned
+    return _pq_mutate(rows, root, fs, delete=True)
+
+
+def _pq_mutate(rows: DataFrame, root: str, fs, delete: bool) -> str:
+    """The PQ payload of the shared IVF router
+    (:func:`~.similarity._ivf_mutate`): encode with the PINNED frozen
+    codebooks — residualized against the PINNED seeds on a residual
+    index, so encoding stays the same pure per-vector function the
+    build used."""
+    from ..streaming.snapshot import index_current, snapshot_read
 
     spark = rows.sparkSession
     pin = index_current(root, fs=fs) or {}
-    cent = _frozen_seeds(spark, root, fs, "delete")
     m, codes, sd, residual = _pq_meta(spark, root, fs, pin)
     cb = snapshot_read(
         spark,
@@ -1021,39 +981,22 @@ def ivf_index_delete_pq(rows: DataFrame, root: str, fs=None) -> str:
         fs=fs,
         version=pin.get("pq_codebooks"),
     )
-    assigned = ivf_assign(rows, centroids=cent)
-    enc_col = "v"
-    if residual:
-        seeds = snapshot_read(
-            spark, os.path.join(root, "seeds"), fs=fs, version=pin.get("seeds")
+
+    def encode(assigned):
+        if residual:
+            seeds = snapshot_read(
+                spark, os.path.join(root, "seeds"), fs=fs,
+                version=pin.get("seeds"),
+            )
+            assigned = _residualize(assigned, seeds)
+        return pq_encode(
+            assigned, cb, m, codes, sub_dim=sd,
+            vec_col="rv" if residual else "v",
         )
-        assigned = _residualize(assigned, seeds)
-        enc_col = "rv"
-    members = ["seeds", "pq_meta", "pq_codebooks", "corpus_pq"]
-    if pin and "corpus" in pin:
-        members.append("corpus")
-        assigned = deferred_persist(assigned)
-        merge_upsert_pruned(
-            spark,
-            os.path.join(root, "corpus"),
-            assigned.select("vec_id", "v", "nrm", "list_id").withColumn(
-                "_del", F.lit(True)
-            ),
-            key=["vec_id"],
-            partition_col="list_id",
-            delete_col="_del",
-            fs=fs,
-        )
-    version = merge_upsert_pruned(
-        spark,
-        os.path.join(root, "corpus_pq"),
-        pq_encode(assigned, cb, m, codes, sub_dim=sd, vec_col=enc_col).withColumn(
-            "_del", F.lit(True)
-        ),
-        key=["vec_id"],
-        partition_col="list_id",
-        delete_col="_del",
-        fs=fs,
+
+    return _ivf_mutate(
+        rows, root, fs, delete,
+        payload="corpus_pq",
+        pin=("seeds", "pq_meta", "pq_codebooks", "corpus_pq"),
+        encode=encode,
     )
-    index_republish(root, members, fs=fs)
-    return version

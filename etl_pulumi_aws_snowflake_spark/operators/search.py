@@ -429,12 +429,33 @@ def bm25_index_append(
     forward (ADVICE r11: dropping it opened a window where a batch
     append between an epoch's meta commit and its checkpoint commit
     made the replayed epoch undetectable — n/Σdl double-counted)."""
+    return _bm25_mutate(
+        new_docs, root, text_col, id_col, fs, False, epoch_id, stream_id
+    )
+
+
+def _bm25_mutate(
+    docs: DataFrame,
+    root: str,
+    text_col: str,
+    id_col: str,
+    fs,
+    delete: bool,
+    epoch_id: int | None = None,
+    stream_id: str | None = None,
+) -> str:
+    """The BM25 append/delete router: read the LIVE meta, apply the
+    family's guards (the epoch-replay rules on a streamed append, the
+    negative-retreat check on a delete), then ONE
+    :func:`~..streaming.snapshot.index_mutate` — the postings pruned
+    MERGE, then the advanced/retreated meta as a whole-snapshot commit
+    carrying the exactly-once stamp — republishing the pair.  Returns
+    the new postings version."""
     import os
 
-    from ..streaming.snapshot import snapshot_commit, snapshot_read
-    from .warehouse import merge_upsert_pruned
+    from ..streaming.snapshot import index_mutate, snapshot_read
 
-    spark = new_docs.sparkSession
+    spark = docs.sparkSession
     row = snapshot_read(spark, os.path.join(root, "meta"), fs=fs).collect()[0]
     n, sum_dl, n_buckets = row["n"], row["sum_dl"], row["n_buckets"]
     last = row["last_epoch"] if "last_epoch" in row.__fields__ else None
@@ -448,7 +469,7 @@ def bm25_index_append(
     # append rewrites the meta with both columns.  A NULL last_stream
     # WITH last_epoch set is the same transitional stamp one hop later
     # (ADVICE r12: a batch-mode append carried the legacy epoch forward
-    # through _stamp, which writes last_stream=NULL) — it too must
+    # through the stamp, which writes last_stream=NULL) — it too must
     # match any stream, or a replay spanning that batch append matches
     # neither arm and double-counts.
     legacy_stamp = last is not None and (
@@ -458,16 +479,12 @@ def bm25_index_append(
         legacy_stamp or stream_id == last_stream
     ):
         if epoch_id == last:
-            from ..streaming.snapshot import (
-                DEFAULT_FS,
-                _current_version,
-                index_republish,
-            )
+            from ..streaming.snapshot import DEFAULT_FS, _current_version
 
             # heal the crash-between-meta-commit-and-publish window:
             # the members are consistent (this epoch fully applied),
             # re-pin them (idempotent when already pinned)
-            index_republish(root, ("postings", "meta"), fs=fs)
+            index_mutate(root, {}, ("postings", "meta"), fs=fs)
             return _current_version(
                 os.path.join(root, "postings"), fs or DEFAULT_FS
             )
@@ -486,51 +503,64 @@ def bm25_index_append(
                 "double-counts the corpus stats."
             )
     w = H.words(text_col)
-    toks = new_docs.select(F.col(id_col), F.expr(w.spark).alias("ws"))
+    # a doc can only be indexed once, so it can only retreat once
+    toks = (docs.dropDuplicates([id_col]) if delete else docs).select(
+        F.col(id_col), F.expr(w.spark).alias("ws")
+    )
+    if delete:
+        # The retreat is counted EAGERLY (one column-pruned agg job) so
+        # the guard fires before anything commits — after the postings
+        # MERGE would be too late to keep the pair consistent.
+        brow = toks.agg(
+            F.count(F.lit(1)).alias("bn"),
+            F.coalesce(F.sum(F.size("ws")), F.lit(0)).alias("bdl"),
+        ).collect()[0]
+        bn, bdl = brow["bn"], brow["bdl"]
+        if bn > n or bdl > sum_dl:
+            raise ValueError(
+                f"bm25_index_delete: retreating {bn} docs / {bdl} tokens "
+                f"would drive the index stats negative (currently n={n}, "
+                f"sum_dl={sum_dl}) — the batch contains ids that were "
+                "never ingested, were already deleted, or text that "
+                "drifted from what was indexed.  Deleting them would "
+                "corrupt avgdl for every later search; reconcile the "
+                "batch or rebuild."
+            )
+        meta = local_frame(
+            spark,
+            [(n - bn, sum_dl - bdl, n_buckets)],
+            "n bigint, sum_dl bigint, n_buckets int",
+        )
+    else:
+        meta = toks.agg(
+            (F.count(F.lit(1)) + F.lit(n)).alias("n"),
+            (F.coalesce(F.sum(F.size("ws")), F.lit(0)) + F.lit(sum_dl)).alias(
+                "sum_dl"
+            ),
+        ).withColumn("n_buckets", F.lit(n_buckets))
+    # The exactly-once (stream, epoch) stamp: a streamed epoch writes
+    # its own pair; a batch-mode commit CARRIES the existing stamp
+    # forward unchanged (never drops it — the ADVICE r11 crash window).
+    if epoch_id is not None:
+        last, last_stream = epoch_id, stream_id
+    if last is not None:
+        meta = meta.withColumn("last_epoch", F.lit(int(last))).withColumn(
+            "last_stream", F.lit(last_stream).cast("string")
+        )
     # match the index's layout: a positional index appends positional
     # rows (schema read from the manifest — plan-only, no job)
     pos = "positions" in snapshot_read(
         spark, os.path.join(root, "postings"), fs=fs
     ).columns
-    version = merge_upsert_pruned(
-        spark,
-        os.path.join(root, "postings"),
-        _postings(toks, n_buckets, id_col, pos),
-        key=["term", id_col],
-        partition_col="tbucket",
-        fs=fs,
-    )
-    meta = (
-        toks.agg(
-            (F.count(F.lit(1)) + F.lit(n)).alias("n"),
-            (F.coalesce(F.sum(F.size("ws")), F.lit(0)) + F.lit(sum_dl)).alias(
-                "sum_dl"
-            ),
-        )
-        .withColumn("n_buckets", F.lit(n_buckets))
-    )
-    meta = _stamp(meta, epoch_id, stream_id, last, last_stream)
-    snapshot_commit(meta, os.path.join(root, "meta"), fs=fs)
-    from ..streaming.snapshot import index_republish
-
-    index_republish(root, ("postings", "meta"), fs=fs)
-    return version
-
-
-def _stamp(meta, epoch_id, stream_id, last, last_stream):
-    """Attach the exactly-once (stream, epoch) stamp to a meta commit:
-    a streamed epoch writes its own pair; a batch-mode commit CARRIES
-    the existing stamp forward unchanged (never drops it — the ADVICE
-    r11 crash window)."""
-    if epoch_id is not None:
-        return meta.withColumn("last_epoch", F.lit(int(epoch_id))).withColumn(
-            "last_stream", F.lit(stream_id).cast("string")
-        )
-    if last is not None:
-        return meta.withColumn("last_epoch", F.lit(int(last))).withColumn(
-            "last_stream", F.lit(last_stream).cast("string")
-        )
-    return meta
+    members = {
+        "postings": (
+            _postings(toks, n_buckets, id_col, pos), ["term", id_col], "tbucket"
+        ),
+        "meta": meta,
+    }
+    return index_mutate(
+        root, members, ("postings", "meta"), delete=delete, fs=fs
+    )["postings"]
 
 
 def bm25_topk_indexed(
@@ -745,59 +775,4 @@ def bm25_index_delete(
     answers queries identically to an index that never ingested the
     batch, stats included.  Returns the new postings snapshot
     version."""
-    import os
-
-    from ..streaming.snapshot import snapshot_commit, snapshot_read
-    from .warehouse import merge_upsert_pruned
-
-    spark = docs.sparkSession
-    row = snapshot_read(spark, os.path.join(root, "meta"), fs=fs).collect()[0]
-    n, sum_dl, n_buckets = row["n"], row["sum_dl"], row["n_buckets"]
-    last = row["last_epoch"] if "last_epoch" in row.__fields__ else None
-    last_stream = row["last_stream"] if "last_stream" in row.__fields__ else None
-    w = H.words(text_col)
-    toks = docs.dropDuplicates([id_col]).select(
-        F.col(id_col), F.expr(w.spark).alias("ws")
-    )
-    # The retreat is counted EAGERLY (one column-pruned agg job) so the
-    # guard fires before anything commits — after the postings MERGE
-    # would be too late to keep the pair consistent.
-    brow = toks.agg(
-        F.count(F.lit(1)).alias("bn"),
-        F.coalesce(F.sum(F.size("ws")), F.lit(0)).alias("bdl"),
-    ).collect()[0]
-    bn, bdl = brow["bn"], brow["bdl"]
-    if bn > n or bdl > sum_dl:
-        raise ValueError(
-            f"bm25_index_delete: retreating {bn} docs / {bdl} tokens "
-            f"would drive the index stats negative (currently n={n}, "
-            f"sum_dl={sum_dl}) — the batch contains ids that were never "
-            "ingested, were already deleted, or text that drifted from "
-            "what was indexed.  Deleting them would corrupt avgdl for "
-            "every later search; reconcile the batch or rebuild."
-        )
-    pos = "positions" in snapshot_read(
-        spark, os.path.join(root, "postings"), fs=fs
-    ).columns
-    version = merge_upsert_pruned(
-        spark,
-        os.path.join(root, "postings"),
-        _postings(toks, n_buckets, id_col, pos).withColumn(
-            "_del", F.lit(True)
-        ),
-        key=["term", id_col],
-        partition_col="tbucket",
-        delete_col="_del",
-        fs=fs,
-    )
-    meta = local_frame(
-        spark,
-        [(n - bn, sum_dl - bdl, n_buckets)],
-        "n bigint, sum_dl bigint, n_buckets int",
-    )
-    meta = _stamp(meta, None, None, last, last_stream)
-    snapshot_commit(meta, os.path.join(root, "meta"), fs=fs)
-    from ..streaming.snapshot import index_republish
-
-    index_republish(root, ("postings", "meta"), fs=fs)
-    return version
+    return _bm25_mutate(docs, root, text_col, id_col, fs, True)

@@ -1075,6 +1075,39 @@ def _frozen_seeds(spark, root: str, fs, op: str, version=None) -> list:
     return cent
 
 
+def _ivf_mutate(
+    rows: DataFrame,
+    root: str,
+    fs,
+    delete: bool,
+    payload: str = "corpus",
+    pin=("seeds", "corpus"),
+    encode=None,
+) -> str:
+    """The one append/delete router of every IVF payload (float, int8,
+    PQ — they differ only in how the ``payload`` member encodes the
+    assigned rows): assign ``rows`` against the FROZEN live seed table,
+    then one :func:`~..streaming.snapshot.index_mutate` over the
+    payload member — preceded, on a rerank-enabled non-float index, by
+    the full-precision ``corpus`` member in lockstep (:func:`_has_member`
+    is the one rerank rule).  Returns the payload member's version."""
+    from ..streaming.snapshot import index_mutate
+
+    cent = _frozen_seeds(
+        rows.sparkSession, root, fs, "delete" if delete else "append"
+    )
+    assigned = ivf_assign(rows, centroids=cent)
+    members, pin = {}, list(pin)
+    if payload != "corpus" and _has_member(root, "corpus", fs):
+        assigned = deferred_persist(assigned)
+        members["corpus"] = (assigned, ["vec_id"], "list_id")
+        pin.append("corpus")
+    members[payload] = (
+        encode(assigned) if encode else assigned, ["vec_id"], "list_id"
+    )
+    return index_mutate(root, members, pin, delete=delete, fs=fs)[payload]
+
+
 def ivf_index_append(new_rows: DataFrame, root: str, fs=None) -> str:
     """Append vectors to a persisted index WITHOUT rebuild: assign them
     against the index's FROZEN seed table (an index's centroids are
@@ -1098,24 +1131,7 @@ def ivf_index_append(new_rows: DataFrame, root: str, fs=None) -> str:
 
     Daily cost at 100 TB: O(lists touched by the batch), not O(index)
     — the same unit of work as the pruned CDC MERGE this reuses."""
-    import os
-
-    from ..streaming.snapshot import index_republish
-    from .warehouse import merge_upsert_pruned
-
-    spark = new_rows.sparkSession
-    cent = _frozen_seeds(spark, root, fs, "append")
-    assigned = ivf_assign(new_rows, centroids=cent)
-    version = merge_upsert_pruned(
-        spark,
-        os.path.join(root, "corpus"),
-        assigned,
-        key=["vec_id"],
-        partition_col="list_id",
-        fs=fs,
-    )
-    index_republish(root, ("seeds", "corpus"), fs=fs)
-    return version
+    return _ivf_mutate(new_rows, root, fs, delete=False)
 
 
 def ivf_topk_indexed(
@@ -1180,25 +1196,7 @@ def ivf_index_delete(rows: DataFrame, root: str, fs=None) -> str:
     moves centroids.  Property-tested: search over build+delete equals
     search over an index built WITHOUT those vectors under the same
     frozen seeds.  Returns the new corpus snapshot version."""
-    import os
-
-    from ..streaming.snapshot import index_republish
-    from .warehouse import merge_upsert_pruned
-
-    spark = rows.sparkSession
-    cent = _frozen_seeds(spark, root, fs, "delete")
-    assigned = ivf_assign(rows, centroids=cent)
-    version = merge_upsert_pruned(
-        spark,
-        os.path.join(root, "corpus"),
-        assigned.withColumn("_del", F.lit(True)),
-        key=["vec_id"],
-        partition_col="list_id",
-        delete_col="_del",
-        fs=fs,
-    )
-    index_republish(root, ("seeds", "corpus"), fs=fs)
-    return version
+    return _ivf_mutate(rows, root, fs, delete=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1324,6 +1322,12 @@ def _has_member(root: str, name: str, fs) -> bool:
     return _current_version(os.path.join(root, name), fs or DEFAULT_FS) is not None
 
 
+#: The int8 payload for :func:`_ivf_mutate`.
+_QUANTIZED_PAYLOAD = dict(
+    payload="corpus_q", pin=("seeds", "corpus_q"), encode=quantize_assigned
+)
+
+
 def ivf_index_append_quantized(new_rows: DataFrame, root: str, fs=None) -> str:
     """Append vectors to a persisted QUANTIZED index WITHOUT rebuild —
     lifecycle parity with :func:`ivf_index_append` (VERDICT r11 #1):
@@ -1338,36 +1342,9 @@ def ivf_index_append_quantized(new_rows: DataFrame, root: str, fs=None) -> str:
     (never indexed — the build's own rule).  Property-tested equal to
     rebuild-over-the-union under the same frozen seeds.  Returns the
     new int8-corpus snapshot version."""
-    import os
-
-    from ..streaming.snapshot import index_republish
-    from .warehouse import merge_upsert_pruned
-
-    spark = new_rows.sparkSession
-    cent = _frozen_seeds(spark, root, fs, "append")
-    assigned = ivf_assign(new_rows, centroids=cent)
-    members = ["seeds", "corpus_q"]
-    if _has_member(root, "corpus", fs):
-        members.append("corpus")
-        assigned = deferred_persist(assigned)
-        merge_upsert_pruned(
-            spark,
-            os.path.join(root, "corpus"),
-            assigned,
-            key=["vec_id"],
-            partition_col="list_id",
-            fs=fs,
-        )
-    version = merge_upsert_pruned(
-        spark,
-        os.path.join(root, "corpus_q"),
-        quantize_assigned(assigned),
-        key=["vec_id"],
-        partition_col="list_id",
-        fs=fs,
+    return _ivf_mutate(
+        new_rows, root, fs, delete=False, **_QUANTIZED_PAYLOAD
     )
-    index_republish(root, members, fs=fs)
-    return version
 
 
 def ivf_index_delete_quantized(rows: DataFrame, root: str, fs=None) -> str:
@@ -1382,38 +1359,7 @@ def ivf_index_delete_quantized(rows: DataFrame, root: str, fs=None) -> str:
     in lockstep.  Property-tested: search over build+delete equals
     search over an index built WITHOUT those vectors under the same
     frozen seeds.  Returns the new int8-corpus snapshot version."""
-    import os
-
-    from ..streaming.snapshot import index_republish
-    from .warehouse import merge_upsert_pruned
-
-    spark = rows.sparkSession
-    cent = _frozen_seeds(spark, root, fs, "delete")
-    assigned = ivf_assign(rows, centroids=cent)
-    members = ["seeds", "corpus_q"]
-    if _has_member(root, "corpus", fs):
-        members.append("corpus")
-        assigned = deferred_persist(assigned)
-        merge_upsert_pruned(
-            spark,
-            os.path.join(root, "corpus"),
-            assigned.withColumn("_del", F.lit(True)),
-            key=["vec_id"],
-            partition_col="list_id",
-            delete_col="_del",
-            fs=fs,
-        )
-    version = merge_upsert_pruned(
-        spark,
-        os.path.join(root, "corpus_q"),
-        quantize_assigned(assigned).withColumn("_del", F.lit(True)),
-        key=["vec_id"],
-        partition_col="list_id",
-        delete_col="_del",
-        fs=fs,
-    )
-    index_republish(root, members, fs=fs)
-    return version
+    return _ivf_mutate(rows, root, fs, delete=True, **_QUANTIZED_PAYLOAD)
 
 
 def ivf_topk_indexed_quantized(

@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from ..cache import scoped_release
 from ..operators.search import bm25_index_append
+from .file_pipeline import stream_files
 
 
 def bm25_ingest_batch(
@@ -90,16 +91,7 @@ def stream_bm25_ingest(
     template (via ``bm25_index_append``), so streamed postings can
     never disagree with built ones."""
 
-    reader = spark.readStream.schema(doc_schema).option(
-        "pathGlobFilter", "*.parquet"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir)
-
     def ingest(batch_df, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         bm25_ingest_batch(
             batch_df,
             epoch_id,
@@ -113,12 +105,7 @@ def stream_bm25_ingest(
             stream_id=checkpoint,
         )
 
-    query = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return stream_files(
+        spark, landing_dir, doc_schema, "parquet", checkpoint, ingest,
+        await_termination, max_files_per_trigger,
     )
-    if await_termination:
-        query.awaitTermination()
-    return query

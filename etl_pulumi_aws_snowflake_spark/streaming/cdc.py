@@ -25,6 +25,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..operators.warehouse import merge_upsert, merge_upsert_pruned
+from .file_pipeline import stream_files
 from .snapshot import DEFAULT_FS, _current_version, snapshot_commit, snapshot_read
 
 
@@ -68,16 +69,7 @@ def stream_cdc_merge(
     Note the STREAM's ``change_schema`` is fixed at start — evolution
     applies when the declared change schema is wider than the current
     snapshot, not to files wider than ``change_schema``."""
-    reader = spark.readStream.schema(change_schema).option(
-        "pathGlobFilter", "*.json"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(changes_dir)
-
     def apply_batch(batch_df, _epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         if partition_col is not None:
             merge_upsert_pruned(
                 spark,
@@ -104,12 +96,7 @@ def stream_cdc_merge(
         )
         snapshot_commit(merged, snapshot_path, fs=fs, expected_current=live)
 
-    query = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return stream_files(
+        spark, changes_dir, change_schema, "json", checkpoint, apply_batch,
+        await_termination, max_files_per_trigger,
     )
-    if await_termination:
-        query.awaitTermination()
-    return query

@@ -25,6 +25,52 @@ from pyspark.sql import types as T
 from ..operators import align
 
 
+def stream_files(
+    spark: SparkSession,
+    source_dir: str,
+    schema: T.StructType,
+    fmt: str,
+    checkpoint: str,
+    process,
+    await_termination: bool = True,
+    max_files_per_trigger: int | None = None,
+    options: dict | None = None,
+):
+    """The one file-stream loop every streaming program here runs
+    on: watch ``source_dir`` for ``*.<fmt>`` files read with
+    ``schema`` (plus reader ``options``), and call ``process(batch_df,
+    epoch_id)`` once per NON-EMPTY micro-batch under
+    ``Trigger.AvailableNow`` with ``checkpoint`` — so each landed file
+    feeds exactly one ``process`` call across restarts.
+    ``max_files_per_trigger`` caps the files per batch (Spark's
+    ``maxFilesPerTrigger``) — bound it when a backlog replay would
+    otherwise land as one unbounded batch.  Returns the
+    StreamingQuery."""
+    reader = spark.readStream.schema(schema).option(
+        "pathGlobFilter", f"*.{fmt}"
+    )
+    for name, value in (options or {}).items():
+        reader = reader.option(name, value)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+
+    def run(batch_df, epoch_id: int) -> None:
+        if batch_df.take(1):
+            process(batch_df, epoch_id)
+
+    query = (
+        reader.format(fmt)
+        .load(source_dir)
+        .writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if await_termination:
+        query.awaitTermination()
+    return query
+
+
 def stream_csv_to_warehouse(
     spark: SparkSession,
     input_dir: str,
@@ -36,23 +82,12 @@ def stream_csv_to_warehouse(
 ):
     """Watch ``input_dir`` for new CSVs; load each batch by-name/CI into
     the typed warehouse table. Returns the StreamingQuery."""
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("header", True)
-        .option("pathGlobFilter", "*.csv")
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-        .csv(input_dir)
-    )
 
     def load_batch(batch_df, _epoch_id: int) -> None:
         align(batch_df, target_schema).write.mode("append").parquet(warehouse_path)
 
-    query = (
-        stream.writeStream.foreachBatch(load_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return stream_files(
+        spark, input_dir, source_schema, "csv", checkpoint, load_batch,
+        await_termination,
+        options={"header": True, "timestampFormat": "yyyy-MM-dd HH:mm:ss"},
     )
-    if await_termination:
-        query.awaitTermination()
-    return query

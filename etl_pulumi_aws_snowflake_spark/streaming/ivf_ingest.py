@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from ..cache import scoped_release
 from ..operators.similarity import ivf_index_append, ivf_index_append_quantized
+from .file_pipeline import stream_files
 
 
 def ivf_ingest_batch(
@@ -83,26 +84,13 @@ def stream_ivf_ingest(
     (``quantized=True``: the int8/ADC index; ``pq=True``: the IVF-PQ
     index — see :func:`ivf_ingest_batch`).  Returns the
     StreamingQuery."""
-    reader = spark.readStream.schema(row_schema).option(
-        "pathGlobFilter", "*.parquet"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir)
 
     def ingest(batch_df, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         ivf_ingest_batch(
             batch_df, epoch_id, index_root, fs=fs, quantized=quantized, pq=pq
         )
 
-    query = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return stream_files(
+        spark, landing_dir, row_schema, "parquet", checkpoint, ingest,
+        await_termination, max_files_per_trigger,
     )
-    if await_termination:
-        query.awaitTermination()
-    return query

@@ -47,6 +47,7 @@ from ..operators.dedup import (
     lsh_index_check,
     minhash_lsh_pairs,
 )
+from .file_pipeline import stream_files
 
 
 def lsh_ingest_batch(
@@ -119,27 +120,14 @@ def stream_lsh_ingest(
     parameters (k, num_hashes, bands), so stream-found pairs are the
     same candidate family the one-shot ``minhash_lsh_pairs`` finds —
     one banding rule everywhere, never two parameterizations."""
-    reader = spark.readStream.schema(doc_schema).option(
-        "pathGlobFilter", "*.parquet"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir)
 
     def ingest_batch(batch_df, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         lsh_ingest_batch(
             batch_df, epoch_id, index_root, results_dir,
             threshold, text_col, id_col, fs=fs,
         )
 
-    query = (
-        stream.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return stream_files(
+        spark, landing_dir, doc_schema, "parquet", checkpoint, ingest_batch,
+        await_termination, max_files_per_trigger,
     )
-    if await_termination:
-        query.awaitTermination()
-    return query

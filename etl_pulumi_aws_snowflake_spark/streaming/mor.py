@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from ..functions.localrel import local_frame
 
 from ..operators.warehouse import merge_schema_check
+from .file_pipeline import stream_files
 from .snapshot import (
     DEFAULT_FS,
     SnapshotConflictError,
@@ -700,16 +701,7 @@ def stream_cdc_merge_mor(
     own partitions with identical content (exactly-once without
     bookkeeping — the same no-state idempotence as the index ingest
     streams)."""
-    reader = spark.readStream.schema(change_schema).option(
-        "pathGlobFilter", "*.json"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(changes_dir)
-
     def apply_batch(batch_df, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         mor_merge(
             spark,
             root,
@@ -720,12 +712,7 @@ def stream_cdc_merge_mor(
             fs=fs,
         )
 
-    query = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return stream_files(
+        spark, changes_dir, change_schema, "json", checkpoint, apply_batch,
+        await_termination, max_files_per_trigger,
     )
-    if await_termination:
-        query.awaitTermination()
-    return query

@@ -186,6 +186,9 @@ _COMMIT_LOCKS_GUARD = threading.Lock()
 
 
 def _commit_lock(root: str):
+    # one lock per ROOT, not per spelling: ``root``, ``root/`` and a
+    # relative path to it must serialize against each other
+    root = os.path.normpath(os.path.abspath(root))
     with _COMMIT_LOCKS_GUARD:
         lock = _COMMIT_LOCKS.get(root)
         if lock is None:
@@ -1016,6 +1019,56 @@ def index_republish(
             )
         members[name] = v
     return index_publish(root, members, fs=fs)
+
+
+def index_mutate(
+    root: str,
+    members: dict,
+    pin,
+    delete: bool = False,
+    fs: LocalFilesystem | None = None,
+) -> dict[str, str]:
+    """The one append/delete path of every persisted index family:
+    commit ``members`` ({member name → spec}) in the order given, then
+    :func:`index_republish` the ``pin`` member names; returns {member →
+    its new version}.
+
+    A ``(rows, key, partition_col)`` spec is a partition-pruned MERGE
+    into ``<root>/<member>`` (``operators/warehouse.merge_upsert_pruned``)
+    — with ``delete=True`` every row carries a ``_del`` flag, so the
+    MERGE removes the matched keys and drops unmatched ones.  A bare
+    DataFrame spec replaces the member wholesale (:func:`snapshot_commit`
+    — e.g. BM25's one-row ``meta``), whatever ``delete`` says.  Members
+    are committed one at a time, in order, because a later member's
+    rows may be derived from an earlier member's pre-commit read.
+
+    Crash contract: each member commit is atomic and serves read the
+    PINNED set, so a crash anywhere before the republish leaves serves
+    on the pre-mutation index; re-running the (keyed, idempotent)
+    mutation lands the same rows and the republish heals the pin.  An
+    empty ``members`` only republishes."""
+    from ..operators.warehouse import merge_upsert_pruned
+
+    out = {}
+    for name, spec in members.items():
+        path = os.path.join(root, name)
+        if isinstance(spec, DataFrame):
+            out[name] = snapshot_commit(spec, path, fs=fs)
+            continue
+        rows, key, partition_col = spec
+        if delete:
+            rows = rows.withColumn("_del", F.lit(True))
+        out[name] = merge_upsert_pruned(
+            rows.sparkSession,
+            path,
+            rows,
+            key=key,
+            partition_col=partition_col,
+            delete_col="_del" if delete else None,
+            fs=fs,
+        )
+    index_republish(root, pin, fs=fs)
+    return out
 
 
 def index_compact(

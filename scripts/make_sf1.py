@@ -6,9 +6,9 @@ shifted ids into a writable dir (default /tmp/sf1).
 TIMING ONLY: /root/testdata is read-only and the driver owns fixture
 generation, so this is NOT oracle data — replicas share text/vector
 payloads (per-row decode/encode work is identical, which is exactly
-what a core-scaling measurement needs) and ids never collide.  Used by
-scripts/sf1_core_scaling.py to put one compute-bound measurement under
-SCALE.md's core-scaling claims.
+what a core-scaling measurement needs) and ids never collide.  It fed
+the compute-bound measurement under SCALE.md's core-scaling claims
+(scripts/sf1_scaling_report*.json).
 """
 
 from __future__ import annotations

@@ -214,6 +214,26 @@ def test_train_stops_when_vocab_fully_merged(spark):
     assert [m[3] for m in merges] == ["ab"]
 
 
+def test_lineage_cut_storage_released_at_query_boundary(tiny_docs):
+    """The every-16th-pass lineage cut is a localCheckpoint — raw-RDD
+    storage that ``unpersist`` cannot reach — so it must be registered
+    for the query-boundary sweep instead of lingering until a JVM GC
+    (where it leaked into later queries' persisted-RDD counts)."""
+    from etl_pulumi_aws_snowflake_spark.cache import (
+        _persistent_rdd_ids,
+        release_deferred,
+    )
+
+    spark = tiny_docs.sparkSession
+    release_deferred(spark)
+    before = _persistent_rdd_ids(spark)
+    stats: dict = {}
+    B.train_bpe(tiny_docs, 20, max_batch=1, stats=stats)
+    assert stats["passes"] >= 16  # at least one lineage cut ran
+    release_deferred(spark)
+    assert _persistent_rdd_ids(spark) <= before
+
+
 # --------------------------------------------------------------------
 # batched merge learning (r17 — VERDICT r16 #7)
 # --------------------------------------------------------------------

@@ -204,9 +204,9 @@ def test_spread_to_cores_ignores_wide_looking_column_names(spark):
     assert not _wide_ancestored(docs)
     cores = spark.sparkContext.defaultParallelism
     spread = spread_to_cores(docs)
-    assert spread.rdd.getNumPartitions() >= min(
-        cores, spread.rdd.getNumPartitions()
-    )
+    # the fixture scan starts NARROWER than the core count, so the
+    # equality below can only hold if spreading widened it
+    assert docs.rdd.getNumPartitions() < cores
     # the single-split fixture scan actually widened
     assert spread.rdd.getNumPartitions() == cores
     # wide ancestors are detected by node class, not by rendered text

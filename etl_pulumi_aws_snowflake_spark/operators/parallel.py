@@ -73,13 +73,16 @@ _WIDE_NODES = frozenset(
 def _wide_ancestored(df: DataFrame) -> bool:
     """Walk the analyzed LOGICAL plan's node classes (not its rendered
     string — column aliases containing "Sort" must not disable the
-    spread) looking for any shuffle-introducing ancestor."""
+    spread) looking for any shuffle-introducing ancestor, including
+    those inside subquery expressions (a filter on a scalar subquery
+    over an aggregate plans that aggregate's shuffle too)."""
     stack = [df._jdf.queryExecution().analyzed()]
     while stack:
         node = stack.pop()
         if node.nodeName() in _WIDE_NODES:
             return True
-        children = node.children().iterator()
-        while children.hasNext():
-            stack.append(children.next())
+        for plans in (node.children(), node.subqueries()):
+            it = plans.iterator()
+            while it.hasNext():
+                stack.append(it.next())
     return False

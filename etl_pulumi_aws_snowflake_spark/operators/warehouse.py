@@ -27,19 +27,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def merge_schema_check(
-    target: DataFrame,
+    target: T.StructType,
     source: DataFrame,
     delete_col: str | None = None,
     allow_new_columns: bool = False,
 ) -> list[tuple[str, str]]:
     """The loud-before-the-join schema validation every MERGE flavor
-    shares (:func:`merge_upsert`'s docstring has the full rules):
-    source must carry every target column at the exact target dtype,
-    ``delete_col`` must resolve, case-variant ambiguity raises under
-    the analyzer's case-insensitive default.  Returns the additive
+    shares (:func:`merge_upsert`'s docstring has the full rules),
+    against the ``target`` table's schema: source must carry every
+    target column at the exact target dtype, ``delete_col`` must
+    resolve, case-variant ambiguity raises under the analyzer's
+    case-insensitive default.  Returns the additive
     NEW columns ``[(name, dtype)]`` when ``allow_new_columns`` (empty
     otherwise) — callers decide what evolution means for their
     storage layout."""
@@ -50,7 +52,7 @@ def merge_schema_check(
         != "true"
     )
     fold = (lambda n: n.lower()) if ci else (lambda n: n)
-    t_types = dict(target.dtypes)
+    t_types = {f.name: f.dataType.simpleString() for f in target.fields}
     s_by_name: dict[str, list[tuple[str, str]]] = {}
     for name, dt in source.dtypes:
         s_by_name.setdefault(fold(name), []).append((name, dt))
@@ -70,7 +72,7 @@ def merge_schema_check(
             "column; the delete flag must come from the source feed"
         )
     missing, drifted = [], {}
-    for c in target.columns:
+    for c in target.names:
         matches = resolve(c)
         if not matches:
             missing.append(c)
@@ -91,7 +93,7 @@ def merge_schema_check(
         )
     new_cols: list[tuple[str, str]] = []
     if allow_new_columns:
-        folded_t = {fold(c) for c in target.columns}
+        folded_t = {fold(c) for c in target.names}
         dc = fold(delete_col) if delete_col is not None else None
         seen: set[str] = set()
         for name, dt in source.dtypes:
@@ -156,7 +158,7 @@ def merge_upsert(
     ``operators.align.align`` first.
     """
     new_cols = merge_schema_check(
-        target, source, delete_col, allow_new_columns
+        target.schema, source, delete_col, allow_new_columns
     )
     t = target.withColumn("_t_exists", F.lit(True)).alias("t")
     s = source.withColumn("_s_exists", F.lit(True)).alias("s")

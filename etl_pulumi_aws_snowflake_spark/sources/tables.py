@@ -9,6 +9,8 @@ DataFrames; :func:`register_views` provides the catalog-name access path
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLE_NAMES = (
@@ -34,17 +36,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     file-listing/footer reads when many queries touch the same table.
     The cache lives on the session object so it dies with the session
     (a global keyed by id() could alias a new session after restart).
+    A cached scan is reused only while the table path's inode and mtime
+    are unchanged: a table rewritten in a live session (new directory,
+    or files added or removed) gets a fresh scan instead of one whose
+    file listing names files that are gone.
     """
     cache = getattr(spark, "_etl_scan_cache", None)
     if cache is None:
         cache = {}
         spark._etl_scan_cache = cache
-    key = (sf_dir, name)
-    df = cache.get(key)
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df = _normalize_nanos(df)
-        cache[key] = df
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+        version = (st.st_ino, st.st_mtime_ns)
+    except OSError:  # not a local path: no cheap version to key on
+        version = None
+    hit = cache.get((sf_dir, name))
+    if hit is not None and hit[0] == version:
+        return hit[1]
+    df = _normalize_nanos(spark.read.parquet(path))
+    cache[(sf_dir, name)] = (version, df)
     return df
 
 

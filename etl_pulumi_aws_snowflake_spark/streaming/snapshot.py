@@ -72,8 +72,8 @@ pinned version dir per batch — GC can never drop them, and the live
 table's data spreads across O(#batches) dirs.  :func:`snapshot_compact`
 is the maintenance counterpart (Iceberg ``rewrite_data_files`` / Delta
 ``OPTIMIZE``): it rewrites every partition whose data lives OUTSIDE the
-live version into a fresh version (optionally coalescing each to one
-file), carrying already-live partitions forward by reference.  The
+live version into a fresh version, one file per rewritten partition,
+carrying already-live partitions forward by reference.  The
 post-compaction manifest references at most two dirs ({new, old-live}),
 so once pre-compaction versions rotate out of the ``keep`` window GC
 reclaims everything older — the reference spread is bounded by the
@@ -640,6 +640,41 @@ def snapshot_versions(
     ]
 
 
+def snapshot_manifest(
+    root: str,
+    version: str | None = None,
+    fs: LocalFilesystem | None = None,
+) -> tuple[str | None, dict | None]:
+    """``(version, manifest)`` of the live version, or of ``version``
+    after the same readability check :func:`snapshot_read` applies
+    (``ValueError`` outside the horizon).  The manifest is ``None`` for
+    an unpartitioned version (or an empty root).  Metadata only: no
+    Spark call, so a caller that needs just the schema or the entries
+    pays no scan planning."""
+    fs = fs or DEFAULT_FS
+    if version is None:
+        v = _current_version(root, fs)
+        return v, (_read_manifest(root, v, fs) if v is not None else None)
+    # Targeted readability check — one listdir + (at most) the
+    # requested version's own manifest, NOT snapshot_versions'
+    # per-version manifest sweep: through a remote fs seam each
+    # manifest read is a round-trip.  Same predicate object as the
+    # horizon listing, so the two can never drift.
+    cur = _current_version(root, fs)
+    on_disk = {d for d in fs.listdir(root) if d.startswith("v-")}
+    ok, man = _version_readable(root, version, cur, on_disk, fs)
+    if not ok:
+        raise ValueError(
+            f"snapshot version {version!r} is not in the readable "
+            f"time-travel horizon of {root} "
+            f"(readable: {snapshot_versions(root, fs)}); it was GC'd "
+            "(fully or via a dropped reference), never committed, or "
+            "is an in-progress/orphaned dir — raise `keep` on "
+            "commits to widen the horizon"
+        )
+    return version, man
+
+
 def snapshot_read(
     spark: SparkSession,
     root: str,
@@ -682,28 +717,7 @@ def snapshot_read(
     an even older dir (GC keeps referenced dirs alive, the
     expire-snapshots rule)."""
     fs = fs or DEFAULT_FS
-    if version is not None:
-        # Targeted readability check — one listdir + (at most) the
-        # requested version's own manifest, NOT snapshot_versions'
-        # per-version manifest sweep: through a remote fs seam each
-        # manifest read is a round-trip.  Same predicate object as the
-        # horizon listing, so the two can never drift.
-        cur = _current_version(root, fs)
-        on_disk = {d for d in fs.listdir(root) if d.startswith("v-")}
-        ok, man = _version_readable(root, version, cur, on_disk, fs)
-        if not ok:
-            raise ValueError(
-                f"snapshot version {version!r} is not in the readable "
-                f"time-travel horizon of {root} "
-                f"(readable: {snapshot_versions(root, fs)}); it was GC'd "
-                "(fully or via a dropped reference), never committed, or "
-                "is an in-progress/orphaned dir — raise `keep` on "
-                "commits to widen the horizon"
-            )
-        v = version
-    else:
-        v = _current_version(root, fs)
-        man = _read_manifest(root, v, fs) if v is not None else None
+    v, man = snapshot_manifest(root, version, fs)
     if man is None:
         if partition_values is not None:
             which = (
@@ -716,7 +730,6 @@ def snapshot_read(
                 f"(snapshot_commit_partitioned); {which} has no manifest"
             )
         return spark.read.parquet(os.path.join(root, v) if v else root)
-    columns = man["columns"]
     entries: dict[str, str] = man["entries"]
     if partition_values is not None:
         wanted = {str(x) for x in partition_values}
@@ -754,16 +767,19 @@ def snapshot_read(
     if not paths:
         from ..functions.localrel import local_frame
 
-        return local_frame(spark, [], schema).select(*columns)
+        return local_frame(spark, [], schema)
     # One scan relation over the selected dirs (wherever their version
     # lives); the partition column is read from the data files, so no
     # dir-name type inference and no per-partition plan nodes.  The
     # scan is pinned to the MANIFEST schema: after additive schema
     # evolution (merge_upsert allow_new_columns), carried-forward
     # partitions' files predate the new column and null-fill it here —
-    # the Delta mergeSchema read behavior — instead of failing the
-    # select or inferring from whichever file is listed first.
-    return spark.read.schema(schema).parquet(*paths).select(*columns)
+    # the Delta mergeSchema read behavior — instead of inferring from
+    # whichever file is listed first.  Leaf dirs carry no partition
+    # discovery, so the scan has exactly the manifest's columns, in
+    # order (the manifest's ``columns`` and ``schema`` come from the
+    # same frame).
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def _next_version_after(prev: str | None) -> str:
@@ -1204,6 +1220,7 @@ def snapshot_commit_partitioned(
     keep: int = 2,
     fs: LocalFilesystem | None = None,
     expected_current=_CAPTURE,
+    sort_within: list | None = None,
 ) -> str:
     """Publish ``df`` as a PARTITIONED snapshot version.
 
@@ -1226,7 +1243,21 @@ def snapshot_commit_partitioned(
     :func:`snapshot_commit`.  It is ALSO the version whose manifest
     supplies the carry-forward entries, so the references and the
     conflict check cannot disagree about which history this commit
-    extends."""
+    extends.
+
+    Write distribution: a commit that can write more than one partition
+    (``changed_values`` is ``None`` or names several) rebalances its
+    rows by partition first — Iceberg's ``write.distribution-mode=hash``,
+    Delta's optimized writes.  Without it every input task holding rows
+    of a partition writes its own file, so a partition of an N-task
+    input lands as up to N small files.  AQE then merges small shuffle
+    partitions into one writer and splits oversized ones at the
+    advisory size: about one file per partition here, files of about
+    64 MiB at scale.  A single-partition commit (the per-batch MoR
+    sidecars, a one-partition MERGE) keeps its plan and pays no
+    shuffle.  ``sort_within`` (columns or Column expressions) sorts each
+    written partition's rows after that distribution — a sort placed
+    before the shuffle would be lost once the input has several tasks."""
     fs = fs or DEFAULT_FS
     if _PDIR in df.columns:
         raise ValueError(f"column name {_PDIR!r} is reserved by the snapshot layout")
@@ -1244,9 +1275,15 @@ def snapshot_commit_partitioned(
         # Partition by a COPY of the column: the dir key gives the layout,
         # while the real column stays in the data files so reads never
         # depend on dir-name parsing (exact values, single scan relation).
-        df.withColumn(_PDIR, F.col(partition_col)).write.mode("overwrite").partitionBy(
-            _PDIR
-        ).parquet(ddir)
+        out = df.withColumn(_PDIR, F.col(partition_col))
+        if changed_values is None or len(changed_values) > 1:
+            out = out.hint("rebalance", _PDIR)
+        if sort_within:
+            # Leading with the dir key keeps each partition's slice of a
+            # writer task contiguous, so every file is monotone in the
+            # sort columns (and the writer needs no sort of its own).
+            out = out.sortWithinPartitions(_PDIR, *sort_within)
+        out.write.mode("overwrite").partitionBy(_PDIR).parquet(ddir)
         written = {
             d.split("=", 1)[1] for d in fs.listdir(ddir) if d.startswith(f"{_PDIR}=")
         }
@@ -1476,7 +1513,6 @@ def snapshot_compact(
     partition_values: list | None = None,
     keep: int = 2,
     fs: LocalFilesystem | None = None,
-    one_file_per_partition: bool = True,
     max_versions_referenced: int = 2,
     cluster_by: list[str] | None = None,
 ) -> str | None:
@@ -1509,12 +1545,6 @@ def snapshot_compact(
     one partition's small files), and the no-op condition is just
     "none of them is carried".
 
-    ``one_file_per_partition`` additionally hash-partitions the rewrite
-    by the partition column, so each rewritten partition lands as a
-    single file — the small-files consolidation half of OPTIMIZE.
-    Leave it False when compacting partitions too large for one task
-    (the write then inherits the plan's parallelism).
-
     ``cluster_by`` sorts each rewritten partition's rows by the given
     columns before writing — linear (1-D) clustering, the ``OPTIMIZE
     ZORDER BY`` idea in the form that covers the dominant
@@ -1526,10 +1556,11 @@ def snapshot_compact(
     metadata.  Content is provably order-insensitive (snapshot reads
     have no row-order contract, and the driver hash canonicalizes), so
     clustering is free to apply on any maintenance pass; rows move at
-    most within their partition's rewrite task.  For genuinely
-    multi-column locality, interleave the dimensions into one column
-    via ``functions.layout.cluster_key`` — it encodes the measured
-    which-curve decision rule (SCALE.md: Hilbert for box probes,
+    most within their partition's rewrite task (the commit sorts after
+    its write distribution, see :func:`snapshot_commit_partitioned`).
+    For genuinely multi-column locality, interleave the dimensions into
+    one column via ``functions.layout.cluster_key`` — it encodes the
+    measured which-curve decision rule (SCALE.md: Hilbert for box probes,
     Morton for leading-dimension bands or read-time-cheap keys)::
 
         from etl_pulumi_aws_snowflake_spark.functions.layout import cluster_key
@@ -1570,14 +1601,10 @@ def snapshot_compact(
     df = snapshot_read(
         spark, root, partition_values=fragmented, fs=fs, version=live
     )
-    if one_file_per_partition:
-        df = df.repartition(F.col(pcol))
-    if cluster_by:
-        # Sort by (partition col, cluster cols): a task may hold rows
-        # of several partitions; leading with pcol keeps each
-        # partition's slice contiguous and cluster-sorted, so every
-        # written file is monotone in the cluster columns.
-        df = df.sortWithinPartitions(pcol, *cluster_by)
+    if len(fragmented) == 1:
+        # The commit distributes only multi-partition writes; consolidating
+        # one partition's small files still needs the shuffle.
+        df = df.hint("rebalance", pcol)
     return snapshot_commit_partitioned(
         df,
         root,
@@ -1586,4 +1613,5 @@ def snapshot_compact(
         keep=keep,
         fs=fs,
         expected_current=live,
+        sort_within=cluster_by,
     )

@@ -583,3 +583,98 @@ def test_mor_merge_between_resets_and_republish_conflicts_loudly(
     # the failed batch re-applies cleanly on the folded pin
     MOR.mor_merge(spark, root, b2, key=["id"], delete_col="del")
     assert _rows(MOR.mor_read(spark, root)) == want
+
+
+def _base_files_per_partition(root):
+    """{partition value: .parquet file count} of the live base."""
+    import json
+
+    base = os.path.join(root, "base")
+    with open(os.path.join(base, index_current(root)["base"], "_MANIFEST.json")) as f:
+        entries = json.load(f)["entries"]
+    return {
+        p: sum(
+            f.endswith(".parquet")
+            for f in os.listdir(os.path.join(base, v, "data", f"_p={p}"))
+        )
+        for p, v in entries.items()
+    }
+
+
+def _jobs_launched(spark, fn):
+    """Spark jobs started while ``fn`` runs (nothing else runs here)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    fn()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def test_mor_base_keeps_one_file_per_partition(spark, tmp_path):
+    """Multi-partition commits distribute rows by partition before
+    writing: a base seeded from a 4-task frame, and every base partition
+    a compaction rewrites (several at once, or just one), holds exactly
+    one file — while a merge's single-partition sidecar commits gain no
+    shuffle (two write jobs, no dedup job)."""
+    root = str(tmp_path / "mor")
+    seed = spark.range(0, 80, numPartitions=4).select(
+        "id",
+        (F.col("id") % 4).alias("part"),
+        F.concat(F.lit("name"), F.col("id").cast("string")).alias("name"),
+        F.col("id").cast("double").alias("bal"),
+    )
+    MOR.mor_init(seed, root, "part", key=["id"])
+    assert _base_files_per_partition(root) == {str(p): 1 for p in range(4)}
+
+    spread = _batch(spark, [(i, i % 4, f"u{i}", -1.0, False) for i in range(0, 12, 5)])
+    jobs = _jobs_launched(
+        spark,
+        lambda: MOR.mor_merge(spark, root, spread, key=["id"], delete_col="del"),
+    )
+    assert jobs <= 2, jobs
+    MOR.mor_merge(
+        spark, root,
+        _batch(spark, [(7, 3, "x", 0.0, True), (100, 0, "new", 1.0, False)]),
+        key=["id"], delete_col="del",
+    )
+    MOR.mor_compact(spark, root)
+    assert _base_files_per_partition(root) == {str(p): 1 for p in range(4)}
+
+    MOR.mor_merge(
+        spark, root, _batch(spark, [(2, 2, "one", 2.0, False)]),
+        key=["id"], delete_col="del",
+    )
+    MOR.mor_compact(spark, root)  # a one-partition fold
+    assert _base_files_per_partition(root) == {str(p): 1 for p in range(4)}
+    got = {r[0]: r[2] for r in _rows(MOR.mor_read(spark, root))}
+    assert len(got) == 80 and got[2] == "one" and got[5] == "u5"
+    assert 7 not in got and got[100] == "new"
+
+
+def test_mor_merge_plans_no_member_scan(spark, tmp_path, monkeypatch):
+    """A merge takes the base and dv schemas from the pinned manifests:
+    it plans no scan of any member (each costs driver round trips and
+    a file listing on every batch), yet keeps the pinned-version
+    readability check and the schema rules."""
+    root = str(tmp_path / "mor")
+    MOR.mor_init(_seed(spark), root, "part", key=["id"])
+
+    def no_scan(*a, **kw):
+        raise AssertionError("mor_merge planned a member scan")
+
+    monkeypatch.setattr(MOR, "snapshot_read", no_scan)
+    MOR.mor_merge(
+        spark, root, _batch(spark, [(0, 0, "u", 1.0, False), (3, 3, "x", 0.0, True)]),
+        key=["id"], delete_col="del",
+    )
+    with pytest.raises(ValueError, match="differ from target"):
+        MOR.mor_merge(
+            spark, root,
+            spark.createDataFrame([(1, 1, "v", 2)], "id long, part long, name string, bal long"),
+            key=["id"],
+        )
+    monkeypatch.undo()
+    got = {r[0]: r[2] for r in _rows(MOR.mor_read(spark, root))}
+    assert len(got) == 39 and got[0] == "u" and 3 not in got

@@ -234,3 +234,15 @@ def test_lsh_lifecycle_entries_demonstrate_pruned_reads(spark):
         warnings.simplefilter("error", LshSaturationWarning)
         rows = q(spark, SF).collect()
     assert rows is not None
+
+
+def test_wide_ancestored_sees_shuffles_inside_subqueries(spark):
+    """A filter on a scalar subquery over an aggregate plans that
+    aggregate's shuffle even though no Aggregate node is a CHILD of the
+    filter — the guard must walk subquery plans too."""
+    from etl_pulumi_aws_snowflake_spark.operators.parallel import _wide_ancestored
+
+    docs = load_table(spark, SF, "documents").select("doc_id")
+    top = docs.groupBy().agg(F.max("doc_id")).scalar()
+    assert not _wide_ancestored(docs)
+    assert _wide_ancestored(docs.filter(F.col("doc_id") == top))

@@ -662,3 +662,89 @@ def test_maintain_isolates_a_raising_remedy(spark, tmp_path, monkeypatch):
     assert "RuntimeError: planted compaction failure" in failed["error"]
     (rebuilt,) = [a for a in rep["actions"] if a["action"] == "lsh_rebuild"]
     assert "error" not in rebuilt
+
+
+def _multi_file_partitions(spark, root):
+    """A snapshot whose partitions each hold rows from several tasks: a
+    4-task frame with its keys scattered across tasks is committed
+    whole (one file per partition), then once per partition as a
+    single-partition commit, which keeps the input's parallelism — one
+    file per task.  Returns the live rows."""
+    from pyspark.sql import functions as F
+
+    from etl_pulumi_aws_snowflake_spark.streaming.snapshot import (
+        snapshot_commit_partitioned,
+    )
+
+    k = (F.col("id") * 7) % 30  # each task's keys interleave the others'
+    seed = spark.range(0, 30, numPartitions=4).select(
+        k.alias("k"), (k % 3).alias("p"), F.lit("r").alias("v")
+    )
+    v = snapshot_commit_partitioned(seed, root, "p")
+    assert all(len(_part_files(root, v, p)) == 1 for p in (0, 1, 2))
+    for p in (0, 1, 2):
+        rows = seed.filter(F.col("p") == p).withColumn("v", F.lit("UPD"))
+        v = snapshot_commit_partitioned(rows, root, "p", changed_values=[p])
+        assert len(_part_files(root, v, p)) >= 2
+    return _rows(spark, root)
+
+
+def test_compaction_clusters_rewritten_partitions_from_many_tasks(spark, tmp_path):
+    """The multi-task case of the clustering test above: each rewritten
+    partition's rows arrive from two or more tasks, so the cluster sort
+    must run after the write distribution, not before it — both for a
+    one-partition compaction and for one that rewrites several."""
+    import pyarrow.parquet as pq
+
+    from etl_pulumi_aws_snowflake_spark.streaming.snapshot import snapshot_compact
+
+    root = str(tmp_path / "snap")
+    before = _multi_file_partitions(spark, root)
+    for scope, want in (([0], ["0"]), (None, ["1", "2"])):
+        v = snapshot_compact(spark, root, partition_values=scope, cluster_by=["k"])
+        assert v is not None
+        assert _rows(spark, root) == before
+
+        man = _manifest(root, v)
+        rewritten = sorted(p for p, ver in man["entries"].items() if ver == v)
+        assert rewritten == want
+        for p in rewritten:
+            d = os.path.join(root, v, "data", f"_p={p}")
+            files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+            assert len(files) == 1
+            ks = pq.read_table(os.path.join(d, files[0]), columns=["k"])[
+                "k"
+            ].to_pylist()
+            assert ks == sorted(ks), f"partition {p} not cluster-sorted: {ks}"
+            assert len(ks) >= 5
+
+
+def test_multi_partition_merge_writes_one_file_per_partition(spark, tmp_path):
+    """A pruned MERGE that rewrites several partitions distributes its
+    rows by partition: each rewritten partition lands as one file even
+    when the merge's key-hashed join leaves its output in many tasks
+    (as it does at scale; here AQE coalescing is off to get there)."""
+    from etl_pulumi_aws_snowflake_spark.operators.warehouse import merge_upsert_pruned
+
+    root = str(tmp_path / "snap")
+    _seed_partitioned(spark, root)
+    batch = spark.createDataFrame(
+        [(3, 0, "U3", False), (4, 1, "U4", False), (31, 1, "NEW", False)],
+        "k bigint, p bigint, v string, is_delete boolean",
+    )
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        v = merge_upsert_pruned(
+            spark, root, batch, ["k"], "p", delete_col="is_delete"
+        )
+    finally:
+        spark.conf.set(conf, prev)
+    man = _manifest(root, v)
+    assert sorted(p for p, ver in man["entries"].items() if ver == v) == ["0", "1"]
+    for p in (0, 1):
+        assert len(_part_files(root, v, p)) == 1
+    rows = _rows(spark, root)
+    assert (3, 0, "U3") in rows and (4, 1, "U4") in rows and (31, 1, "NEW") in rows
+    assert len(rows) == 31

@@ -82,3 +82,21 @@ def test_persistent_catalog_ingest(spark):
         assert fresh.catalog.tableExists(name)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_load_table_sees_a_table_rewritten_in_the_session(spark, tmp_path):
+    """The per-session scan cache must not outlive the table it
+    lists: after the table directory is rewritten, the next load
+    returns the new rows instead of failing on vanished files."""
+    sf = str(tmp_path)
+    path = f"{sf}/region.parquet"
+    schema = "k bigint, v string"
+    spark.createDataFrame([(1, "a"), (2, "b")], schema).write.parquet(path)
+    first = load_table(spark, sf, "region")
+    assert sorted(map(tuple, first.collect())) == [(1, "a"), (2, "b")]
+    assert load_table(spark, sf, "region") is first  # unchanged: cached
+
+    spark.createDataFrame([(3, "c")], schema).write.mode("overwrite").parquet(path)
+    assert sorted(map(tuple, load_table(spark, sf, "region").collect())) == [
+        (3, "c")
+    ]

@@ -637,14 +637,7 @@ def lsh_build_index(
     pinned {meta, sets, bands} set once, so a concurrent
     rebuild/append can never mix one member's new version with
     another's old one."""
-    import os
-
-    from ..streaming.snapshot import (
-        commit_concurrently,
-        index_publish,
-        snapshot_commit,
-        snapshot_commit_partitioned,
-    )
+    from ..streaming.snapshot import index_build
 
     if num_hashes % bands != 0:
         raise ValueError(
@@ -678,25 +671,20 @@ def lsh_build_index(
     banded = _banded_keys(sets, num_hashes, bands, id_col).withColumn(
         "bucket", F.pmod(F.col("key"), F.lit(n_buckets))
     )
-    members = commit_concurrently(
+    members = index_build(
+        root,
         {
-            "meta": lambda: snapshot_commit(
-                meta, os.path.join(root, "meta"), fs=fs
-            ),
-            "sets": lambda: snapshot_commit_partitioned(
+            "meta": meta,
+            "sets": (
                 sets.withColumn(
                     "dbucket", F.pmod(F.col(id_col), F.lit(n_buckets))
                 ),
-                os.path.join(root, "sets"),
                 "dbucket",
-                fs=fs,
             ),
-            "bands": lambda: snapshot_commit_partitioned(
-                banded, os.path.join(root, "bands"), "bucket", fs=fs
-            ),
-        }
+            "bands": (banded, "bucket"),
+        },
+        fs=fs,
     )
-    index_publish(root, members, fs=fs)
     return members["bands"]
 
 

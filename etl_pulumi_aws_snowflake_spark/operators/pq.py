@@ -560,12 +560,7 @@ def ivf_build_index_pq(
     the oracle replays bit-for-bit.  Custom ``codebooks`` with
     ``residual=True`` must have been trained over residuals against
     THESE seeds.  Returns the PQ-corpus snapshot version."""
-    from ..streaming.snapshot import (
-        commit_concurrently,
-        index_publish,
-        snapshot_commit,
-        snapshot_commit_partitioned,
-    )
+    from ..streaming.snapshot import index_build
 
     spark = corpus.sparkSession
     seeds, seed_rows, assigned = _seeds_assigned_once(
@@ -611,39 +606,25 @@ def ivf_build_index_pq(
                 f"custom PQ codebooks have sub_dim={sd} over m={m} "
                 f"subspaces ({sd * m} dims) but the corpus is {dim}-dim"
             )
-    jobs = {
-        "seeds": lambda: snapshot_commit(
-            seeds, os.path.join(root, "seeds"), fs=fs
+    members = {
+        "seeds": seeds,
+        "pq_meta": local_frame(
+            spark,
+            [(m, codes, sd, bool(residual))],
+            "m int, codes int, sub_dim int, residual boolean",
         ),
-        "pq_meta": lambda: snapshot_commit(
-            local_frame(
-                spark,
-                [(m, codes, sd, bool(residual))],
-                "m int, codes int, sub_dim int, residual boolean",
-            ),
-            os.path.join(root, "pq_meta"),
-            fs=fs,
-        ),
-        "pq_codebooks": lambda: snapshot_commit(
-            cb, os.path.join(root, "pq_codebooks"), fs=fs
-        ),
-        "corpus_pq": lambda: snapshot_commit_partitioned(
+        "pq_codebooks": cb,
+        "corpus_pq": (
             pq_encode(assigned, cb, m, codes, sub_dim=sd, vec_col=enc_col),
-            os.path.join(root, "corpus_pq"),
             "list_id",
-            fs=fs,
         ),
     }
     if rerank_payload:
-        jobs["corpus"] = lambda: snapshot_commit_partitioned(
+        members["corpus"] = (
             assigned.select("vec_id", "v", "nrm", "list_id"),
-            os.path.join(root, "corpus"),
             "list_id",
-            fs=fs,
         )
-    members = commit_concurrently(jobs)
-    index_publish(root, members, fs=fs)
-    return members["corpus_pq"]
+    return index_build(root, members, fs=fs)["corpus_pq"]
 
 
 def _pq_meta(spark, root: str, fs, pin: dict) -> tuple[int, int, int, bool]:

@@ -200,14 +200,7 @@ def bm25_build_index(
     enabling exact phrase queries (:func:`phrase_search_indexed`) on
     the same routed-bucket layout.  ~1 int per corpus token of extra
     payload — the standard positional-postings trade."""
-    import os
-
-    from ..streaming.snapshot import (
-        commit_concurrently,
-        index_publish,
-        snapshot_commit,
-        snapshot_commit_partitioned,
-    )
+    from ..streaming.snapshot import index_build
 
     w = H.words(text_col)
     toks = docs.select(F.col(id_col), F.expr(w.spark).alias("ws"))
@@ -218,20 +211,16 @@ def bm25_build_index(
         )
         .withColumn("n_buckets", F.lit(n_buckets))
     )
-    members = commit_concurrently(
+    members = index_build(
+        root,
         {
-            "meta": lambda: snapshot_commit(
-                meta, os.path.join(root, "meta"), fs=fs
+            "meta": meta,
+            "postings": (
+                _postings(toks, n_buckets, id_col, positions), "tbucket"
             ),
-            "postings": lambda: snapshot_commit_partitioned(
-                _postings(toks, n_buckets, id_col, positions),
-                os.path.join(root, "postings"),
-                "tbucket",
-                fs=fs,
-            ),
-        }
+        },
+        fs=fs,
     )
-    index_publish(root, members, fs=fs)
     return members["postings"]
 
 

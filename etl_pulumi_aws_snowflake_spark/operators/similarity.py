@@ -1019,29 +1019,14 @@ def ivf_build_index(
     both members at those exact versions, so a rebuild or append
     landing mid-serve can never mix one member's new version with the
     other's old one."""
-    import os
-
-    from ..streaming.snapshot import (
-        commit_concurrently,
-        index_publish,
-        snapshot_commit,
-        snapshot_commit_partitioned,
-    )
+    from ..streaming.snapshot import index_build
 
     seeds, _, assigned = _seeds_assigned_once(
         corpus, seed_stride, centroids, nlists
     )
-    members = commit_concurrently(
-        {
-            "seeds": lambda: snapshot_commit(
-                seeds, os.path.join(root, "seeds"), fs=fs
-            ),
-            "corpus": lambda: snapshot_commit_partitioned(
-                assigned, os.path.join(root, "corpus"), "list_id", fs=fs
-            ),
-        }
+    members = index_build(
+        root, {"seeds": seeds, "corpus": (assigned, "list_id")}, fs=fs
     )
-    index_publish(root, members, fs=fs)
     return members["corpus"]
 
 
@@ -1269,38 +1254,20 @@ def ivf_build_index_quantized(
     touched only for the ``m·k`` survivors per probe (row-group-pruned
     by a pushed ``vec_id IN`` filter), so routed IO stays ~int8-sized
     while final scores are full-precision."""
-    import os
-
-    from ..streaming.snapshot import (
-        commit_concurrently,
-        index_publish,
-        snapshot_commit,
-        snapshot_commit_partitioned,
-    )
+    from ..streaming.snapshot import index_build
 
     seeds, _, assigned = _seeds_assigned_once(
         corpus, seed_stride, centroids, nlists
     )
     if rerank_payload:
         assigned = deferred_persist(assigned)
-    jobs = {
-        "seeds": lambda: snapshot_commit(
-            seeds, os.path.join(root, "seeds"), fs=fs
-        ),
-        "corpus_q": lambda: snapshot_commit_partitioned(
-            quantize_assigned(assigned),
-            os.path.join(root, "corpus_q"),
-            "list_id",
-            fs=fs,
-        ),
+    members = {
+        "seeds": seeds,
+        "corpus_q": (quantize_assigned(assigned), "list_id"),
     }
     if rerank_payload:
-        jobs["corpus"] = lambda: snapshot_commit_partitioned(
-            assigned, os.path.join(root, "corpus"), "list_id", fs=fs
-        )
-    members = commit_concurrently(jobs)
-    index_publish(root, members, fs=fs)
-    return members["corpus_q"]
+        members["corpus"] = (assigned, "list_id")
+    return index_build(root, members, fs=fs)["corpus_q"]
 
 
 def _has_member(root: str, name: str, fs) -> bool:

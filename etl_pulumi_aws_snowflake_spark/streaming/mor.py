@@ -80,6 +80,7 @@ from .snapshot import (
     _current_version,
     _read_manifest,
     commit_concurrently,
+    index_build,
     index_current,
     index_publish,
     snapshot_commit_partitioned,
@@ -165,48 +166,42 @@ def mor_init(
     dv_cols = list(key) + (
         [partition_col] if partition_col not in key else []
     )
-    # The three member commits write disjoint roots with no ordering
-    # constraint until the pin below — run them concurrently so the
-    # two (trivial) sidecar seeds overlap the base write's tail
-    # instead of serializing three jobs end to end.
-    versions = commit_concurrently(
-        {
-            "base": lambda: snapshot_commit_partitioned(
-                df, _member(root, "base"), partition_col, keep=keep, fs=fs
-            ),
-            "data": lambda: snapshot_commit_partitioned(
-                empty.select(*df.columns).withColumn(
-                    BATCH_COL, F.lit(0).cast("long")
-                ),
-                _member(root, "data"),
-                BATCH_COL,
-                keep=keep,
-                fs=fs,
-            ),
-            "dv": lambda: snapshot_commit_partitioned(
-                empty.select(*dv_cols).withColumn(
-                    BATCH_COL, F.lit(0).cast("long")
-                ),
-                _member(root, "dv"),
-                BATCH_COL,
-                keep=keep,
-                fs=fs,
-            ),
-        }
-    )
-    vb, vd, vv = versions["base"], versions["data"], versions["dv"]
     # The dv SCHEMA cannot say whether pcol is declared row identity or
     # the appended pruning column — both land as the same column set —
     # so the declared key is recorded verbatim (review r14: without it,
     # a table initialized with pcol as REAL identity, same key value
     # live in two partitions, accepted a pcol-omitting merge key and
-    # silently reinterpreted the caller's row identity).
+    # silently reinterpreted the caller's row identity).  It is written
+    # before the build, so it always lands before the pin publish.
+    fs.mkdirs(root)
     fs.write_text(
         os.path.join(root, _KEY_FILE),
         json.dumps({"key": list(key), "pcol_appended": partition_col not in key}),
     )
-    index_publish(root, {"base": vb, "dv": vv, "data": vd}, keep=keep, fs=fs)
-    return {"base": vb, "dv": vv, "data": vd}
+    # The three member commits write disjoint roots with no ordering
+    # constraint until the pin, so index_build runs them concurrently:
+    # the two (trivial) sidecar seeds overlap the base write's tail
+    # instead of serializing three jobs end to end.
+    return index_build(
+        root,
+        {
+            "base": (df, partition_col),
+            "dv": (
+                empty.select(*dv_cols).withColumn(
+                    BATCH_COL, F.lit(0).cast("long")
+                ),
+                BATCH_COL,
+            ),
+            "data": (
+                empty.select(*df.columns).withColumn(
+                    BATCH_COL, F.lit(0).cast("long")
+                ),
+                BATCH_COL,
+            ),
+        },
+        keep=keep,
+        fs=fs,
+    )
 
 
 def _declared_key(root: str, fs) -> dict | None:

@@ -81,12 +81,12 @@ compaction cadence instead of the batch count.
 :func:`snapshot_fragmentation` reports the spread so a maintenance job
 can decide when to run it.
 
-**Concurrent writers — detected, not locked.**  The protocol is
-single-writer by design (one CDC stream owns a snapshot root, exactly
-like a Delta/Iceberg table has one committer per stream).  An
-ACCIDENTAL second writer is a lost update: both read the same live
-version, both derive ``v-N+1``, the second pointer swap silently
-discards the first commit.  Commits therefore run optimistically
+**Concurrent writers — detected across processes, serialized within
+one.**  The protocol is single-writer by design (one CDC stream owns a
+snapshot root, exactly like a Delta/Iceberg table has one committer per
+stream).  An ACCIDENTAL second writer is a lost update: both read the
+same live version, both derive ``v-N+1``, the second pointer swap
+silently discards the first commit.  Commits therefore run optimistically
 against an ``expected_current`` token (the version the caller's merge
 actually READ; defaults to the live version at commit start), checked
 TWICE: once before any data is written — a writer that starts its
@@ -105,7 +105,12 @@ create, DynamoDB conditional put, or a catalog commit, the
 Delta/Iceberg approach — and an exclusive claim here would deadlock
 the documented crash-replay path).  The contract is therefore still
 SINGLE WRITER per snapshot root; the checks exist to make accidental
-violations loud and bounded instead of silent.
+violations loud and bounded instead of silent.  Inside one process every
+publish — :func:`snapshot_commit`, :func:`snapshot_commit_partitioned`
+and :func:`index_publish` alike — runs the same commit bracket
+(:func:`_publish`) under a per-root lock, so two in-process writers
+deriving from one version serialize: the first publishes, the second
+fails the check before writing anything.
 
 **Filesystem seam.**  All pointer/manifest path manipulation goes
 through a small injectable filesystem object (:class:`LocalFilesystem`
@@ -168,16 +173,19 @@ class SnapshotConflictError(RuntimeError):
     untouched, unpublished dir removed).  Re-read and retry."""
 
 
-#: Per-root in-process commit locks.  Two same-process writers whose
-#: commits derive from the same expected version compute the same
-#: ``v-next`` dir; both writing it CONCURRENTLY lets one
+#: Per-root in-process commit locks, taken by :func:`_publish` for
+#: snapshot commits and index publishes alike.  Two same-process
+#: writers whose commits derive from the same expected version compute
+#: the same ``v-next`` dir; both writing it CONCURRENTLY lets one
 #: ``mode("overwrite")`` clobber the other's in-flight ``_temporary``
 #: files — an opaque FS error (and possible torn data) instead of the
 #: designed :class:`SnapshotConflictError` (surfaced r19 by the
 #: mor compact-vs-merge race test once empty sidecar frames stopped
-#: paying Python-worker latency).  Serializing the write+swap window
-#: per root turns that race back into the orderly conflict.  Commits
-#: to DIFFERENT roots — the §2.6 concurrent member commits — never
+#: paying Python-worker latency) — and lets an index publish overwrite
+#: the pin file of a racer that already swapped the pointer to that
+#: dir (a lost update).  Serializing the write+swap window per root
+#: turns both races back into the orderly conflict.  Commits to
+#: DIFFERENT roots — the §2.6 concurrent member commits — never
 #: contend.  Cross-PROCESS writers remain out of contract (the
 #: single-writer rule); this lock is for the in-process overlap the
 #: layer itself creates.
@@ -832,8 +840,24 @@ def _check_unchanged(
     )
 
 
-def _swap_pointer(root: str, new: str, fs: LocalFilesystem = DEFAULT_FS) -> None:
-    _pointer_publish(root, new, fs)
+def _publish(root: str, expected_current, keep: int, fs, write) -> str:
+    """The one commit bracket of every publish to ``root``: under the
+    root's commit lock, resolve the token (``_CAPTURE`` → the live
+    version), check it before the write, derive the next version,
+    ``write(new, expected)`` its contents, check again, swap the
+    pointer and GC.  Returns the new version name."""
+    with _commit_lock(root):
+        expected = (
+            _current_version(root, fs) if expected_current is _CAPTURE
+            else expected_current
+        )
+        _check_unchanged(root, expected, fs)
+        new = _next_version_after(expected)
+        write(new, expected)
+        _check_unchanged(root, expected, fs, new=new)
+        _pointer_publish(root, new, fs)
+        _gc(root, keep, fs)
+        return new
 
 
 def _gc(root: str, keep: int, fs: LocalFilesystem = DEFAULT_FS) -> None:
@@ -875,7 +899,7 @@ def commit_concurrently(jobs: dict, max_workers: int = 3) -> dict[str, str]:
     Actions are only sequential because the driver calls them
     sequentially (optimization guide §2.6): each member writes its own
     snapshot root (no shared pointer, no ordering constraint until the
-    caller's ``index_publish`` pins the finished set), so submitting
+    caller's :func:`index_publish` pins the finished set), so submitting
     them together lets the small members' jobs back-fill executor
     slots freed by the big member's straggler tail instead of
     serializing N write jobs end to end.  2-3 in flight is enough to
@@ -911,13 +935,14 @@ def index_publish(
     documented torn window between two member commits (a search
     between them used to score new candidates against old stats).
 
-    Same protocol as :func:`snapshot_commit` minus the data write: the
-    new index version dir holds one tiny JSON pin-file, optimistic
-    conflict checks bracket it, the pointer swap is the publish, and
-    GC trims old pin dirs (no manifests, so nothing is
-    carried-forward).  Through a :class:`CommitLogPointer` fs the swap
-    is a true CAS — two writers racing to publish the same next index
-    version lose deterministically.  Returns the index version name.
+    Same commit bracket as :func:`snapshot_commit` (:func:`_publish`,
+    per-root lock included) minus the data write: the new index version
+    dir holds one tiny JSON pin-file, optimistic conflict checks bracket
+    it, the pointer swap is the publish, and GC trims old pin dirs (no
+    manifests, so nothing is carried-forward).  Through a
+    :class:`CommitLogPointer` fs the swap is a true CAS — two writers
+    racing to publish the same next index version lose
+    deterministically.  Returns the index version name.
 
     Readers: :func:`index_current` resolves the pinned set once, then
     every member read passes ``version=`` to :func:`snapshot_read` —
@@ -926,94 +951,15 @@ def index_publish(
     republishes, so the pinned set is never more than one member
     commit behind the member pointers."""
     fs = fs or DEFAULT_FS
-    expected = (
-        _current_version(root, fs) if expected_current is _CAPTURE
-        else expected_current
-    )
-    _check_unchanged(root, expected, fs)
-    new = _next_version_after(expected)
-    fs.mkdirs(os.path.join(root, new))
-    fs.write_text(
-        os.path.join(root, new, _INDEX_JSON),
-        json.dumps(dict(members), sort_keys=True),
-    )
-    _check_unchanged(root, expected, fs, new=new)
-    _swap_pointer(root, new, fs)
-    _gc(root, keep, fs)
-    return new
 
+    def write(new, _expected):
+        fs.mkdirs(os.path.join(root, new))
+        fs.write_text(
+            os.path.join(root, new, _INDEX_JSON),
+            json.dumps(dict(members), sort_keys=True),
+        )
 
-def index_publish_retry(
-    root: str,
-    updates: dict[str, str],
-    expected_current,
-    max_retries: int = 3,
-    keep: int = 2,
-    fs: LocalFilesystem | None = None,
-) -> str:
-    """Optimistic rebase-and-retry for index-pin publishes — the
-    index-family half of :func:`snapshot_commit_partitioned_retry`
-    (VERDICT r14 gap #3 named index appends as the commutative case):
-    a maintenance op that committed member snapshots wants to publish
-    ``updates`` ({member → the version it left live}) against the pin
-    it derived from (``expected_current``, REQUIRED — the version the
-    op's reads were pinned to; ``None`` for a first publish).
-
-    On a racing publish, diff the base pin against the live pin over
-    ``updates``'s members: racers that moved only OTHER members (an
-    IVF corpus append racing a BM25 postings append under one root, a
-    stats advance racing a deletes fold) are commutative — rebase by
-    carrying the racer's member versions forward and re-pinning.  A
-    racer that moved one of OUR members means this op's member commit
-    itself raced (its own snapshot CAS decides who won) — re-raise
-    naming the members; and an unreadable base pin (GC'd dir) is
-    conservatively overlapping."""
-    fs = fs or DEFAULT_FS
-
-    def pin_of(version):
-        if version is None:
-            return {}
-        try:
-            return json.loads(
-                fs.read_text(os.path.join(root, version, _INDEX_JSON))
-            )
-        except FileNotFoundError:
-            return None
-
-    token = expected_current
-    base = pin_of(token)
-    for attempt in range(max_retries + 1):
-        if base is None:
-            raise SnapshotConflictError(
-                f"index root {root}: the base pin {token!r} is gone "
-                "(GC'd by concurrent publishes) — cannot prove the "
-                "racers were member-disjoint; re-derive and republish"
-            )
-        try:
-            return index_publish(
-                root, {**base, **updates}, keep=keep, fs=fs,
-                expected_current=token,
-            )
-        except SnapshotConflictError:
-            if attempt == max_retries:
-                raise
-            live = _current_version(root, fs)
-            live_pin = pin_of(live)
-            if live_pin is None:
-                base = None
-                continue  # surfaces the conservative error above
-            touched = [
-                m for m in updates if base.get(m) != live_pin.get(m)
-            ]
-            if touched:
-                raise SnapshotConflictError(
-                    f"index root {root}: concurrent publishes moved "
-                    f"members {touched} this publish also updates — "
-                    "not rebase-safe (the member snapshots themselves "
-                    "raced); re-run the maintenance op"
-                ) from None
-            token, base = live, live_pin
-    raise AssertionError("unreachable")
+    return _publish(root, expected_current, keep, fs, write)
 
 
 def index_republish(
@@ -1035,6 +981,42 @@ def index_republish(
             )
         members[name] = v
     return index_publish(root, members, fs=fs)
+
+
+def index_build(
+    root: str,
+    members: dict,
+    keep: int = 2,
+    fs: LocalFilesystem | None = None,
+) -> dict[str, str]:
+    """The one build path of every persisted index family: commit
+    ``members`` ({member name → spec}) under ``<root>/<member>``
+    through :func:`commit_concurrently`, then :func:`index_publish`
+    the versions they left live as one pin; returns {member → version}.
+
+    A bare DataFrame spec is a whole-snapshot commit
+    (:func:`snapshot_commit`); a ``(df, partition_col)`` spec is a full
+    partitioned rewrite (:func:`snapshot_commit_partitioned`).  ``keep``
+    applies to every member root and to the index root alike.
+
+    Crash contract: a member commit that fails raises before the
+    publish, so serves keep reading the previously pinned set; the
+    members that did commit only moved their own pointers."""
+
+    def job(name, spec):
+        path = os.path.join(root, name)
+        if isinstance(spec, DataFrame):
+            return lambda: snapshot_commit(spec, path, keep=keep, fs=fs)
+        df, partition_col = spec
+        return lambda: snapshot_commit_partitioned(
+            df, path, partition_col, keep=keep, fs=fs
+        )
+
+    versions = commit_concurrently(
+        {name: job(name, spec) for name, spec in members.items()}
+    )
+    index_publish(root, versions, keep=keep, fs=fs)
+    return versions
 
 
 def index_mutate(
@@ -1198,18 +1180,15 @@ def snapshot_commit(
     instead of silently overwriting another writer's publication
     (module docstring)."""
     fs = fs or DEFAULT_FS
-    with _commit_lock(root):
-        expected = (
-            _current_version(root, fs) if expected_current is _CAPTURE
-            else expected_current
-        )
-        _check_unchanged(root, expected, fs)
-        new = _next_version_after(expected)
-        df.write.mode("overwrite").parquet(os.path.join(root, new))
-        _check_unchanged(root, expected, fs, new=new)
-        _swap_pointer(root, new, fs)
-        _gc(root, keep, fs)
-        return new
+    return _publish(
+        root,
+        expected_current,
+        keep,
+        fs,
+        lambda new, _expected: df.write.mode("overwrite").parquet(
+            os.path.join(root, new)
+        ),
+    )
 
 
 def snapshot_commit_partitioned(
@@ -1264,13 +1243,8 @@ def snapshot_commit_partitioned(
     if changed_values is not None:
         for val in changed_values:
             _validate_partition_value(val, "changed_values")
-    with _commit_lock(root):
-        expected = (
-            _current_version(root, fs) if expected_current is _CAPTURE
-            else expected_current
-        )
-        _check_unchanged(root, expected, fs)
-        new = _next_version_after(expected)
+
+    def write(new, expected):
         ddir = os.path.join(root, new, "data")
         # Partition by a COPY of the column: the dir key gives the layout,
         # while the real column stays in the data files so reads never
@@ -1351,10 +1325,8 @@ def snapshot_commit_partitioned(
         tmp = os.path.join(root, new, f".{_MANIFEST}.tmp")
         fs.write_text(tmp, json.dumps(manifest))
         fs.rename(tmp, os.path.join(root, new, _MANIFEST))
-        _check_unchanged(root, expected, fs, new=new)
-        _swap_pointer(root, new, fs)
-        _gc(root, keep, fs)
-        return new
+
+    return _publish(root, expected_current, keep, fs, write)
 
 
 def _partitions_touched_between(

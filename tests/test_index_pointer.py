@@ -10,13 +10,16 @@ through the commit-log store.
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_pulumi_aws_snowflake_spark.operators import dedup as D
+from etl_pulumi_aws_snowflake_spark.operators import pq as PQ
 from etl_pulumi_aws_snowflake_spark.operators import search as SR
 from etl_pulumi_aws_snowflake_spark.operators import similarity as S
+from etl_pulumi_aws_snowflake_spark.streaming import mor as MOR
 from etl_pulumi_aws_snowflake_spark.streaming import snapshot as SN
 from etl_pulumi_aws_snowflake_spark.streaming.snapshot import (
     CommitLogPointer,
@@ -63,6 +66,49 @@ def test_index_publish_cas_conflict(tmp_path):
     # republish on a root missing a member fails loudly
     with pytest.raises(ValueError, match="no live snapshot"):
         index_republish(str(tmp_path / "empty"), ("corpus",))
+
+
+def test_concurrent_index_publishes_serialize_per_root(tmp_path):
+    """Two in-process publishes against the same token: publish B starts
+    while publish A is writing its pin file.  Index publishes take the
+    per-root commit lock, so A finishes first and B conflicts; without
+    the lock B published the same version dir, A overwrote B's pin file
+    and then raised, so the live pin held the members of the publish
+    that reported failure (a lost update)."""
+    root = str(tmp_path / "ix")
+    base = index_publish(root, {"m": "v-00001"})
+    pins = {"a": {"m": "v-00011"}, "b": {"m": "v-00022"}}
+    outcome: dict = {}
+
+    def publish(name):
+        try:
+            outcome[name] = index_publish(
+                root, pins[name], fs=fs, expected_current=base
+            )
+        except SnapshotConflictError as exc:
+            outcome[name] = exc
+
+    class _RacingFS(SN.LocalFilesystem):
+        racer = None
+
+        def write_text(self, path, text):
+            if self.racer is None and path.endswith(SN._INDEX_JSON):
+                self.racer = threading.Thread(target=publish, args=("b",))
+                self.racer.start()
+                self.racer.join(timeout=1.0)
+            super().write_text(path, text)
+
+    fs = _RacingFS()
+    publish("a")
+    fs.racer.join(timeout=30)
+    assert not fs.racer.is_alive()
+    won = [n for n, out in outcome.items() if isinstance(out, str)]
+    lost = [
+        n for n, out in outcome.items()
+        if isinstance(out, SnapshotConflictError)
+    ]
+    assert len(won) == 1 and len(lost) == 1, outcome
+    assert index_current(root) == pins[won[0]]
 
 
 def _emb(spark):
@@ -182,6 +228,86 @@ def test_lsh_rebuild_crash_between_members_serves_old_trio(
         map(tuple, D.lsh_index_check(batch, root, threshold=0.8).collect())
     )
     assert after == before
+
+
+def _int8_rerank_rebuild(spark):
+    emb = _emb(spark)
+    probes = emb.filter(F.col("vec_id") % 40 == 0)
+    return (
+        lambda root, nlists: S.ivf_build_index_quantized(
+            emb, root, nlists=nlists, rerank_payload=True
+        ),
+        lambda root: S.ivf_topk_indexed_quantized_rerank(
+            probes, root, k=3, nprobe=2, m=3
+        ),
+    )
+
+
+def _pq_rerank_rebuild(spark):
+    emb = _emb(spark)
+    probes = emb.filter(F.col("vec_id") % 40 == 0)
+    return (
+        lambda root, nlists: PQ.ivf_build_index_pq(
+            emb, root, nlists=nlists, m=2, codes=4, rerank_payload=True
+        ),
+        lambda root: PQ.ivf_topk_indexed_pq_rerank(
+            probes, root, k=3, nprobe=2, m=3
+        ),
+    )
+
+
+def _mor_reinit(spark):
+    rows = spark.createDataFrame(
+        [(i, i % 4, float(i)) for i in range(40)],
+        "id long, part long, val double",
+    )
+    return (
+        # the rebuild re-seeds the live root from a third of the rows
+        lambda root, nlists: MOR.mor_init(
+            rows.filter(F.col("id") % nlists == 0), root, "part", key=["id"]
+        ),
+        lambda root: MOR.mor_read(spark, root),
+    )
+
+
+_REBUILDS = {
+    # case: (member whose commit dies, case factory)
+    "int8_rerank": ("corpus_q", _int8_rerank_rebuild),
+    "pq_rerank": ("corpus_pq", _pq_rerank_rebuild),
+    "mor_reinit": ("dv", _mor_reinit),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_REBUILDS))
+def test_rebuild_crash_between_members_serves_old_pin(
+    spark, tmp_path, monkeypatch, case
+):
+    """The builds without a family-specific torn-window test: a rebuild
+    in place whose partitioned member commit dies while the other
+    members commit must leave serves (or ``mor_read``) on exactly the
+    pre-crash rows — the pin still names the old member set."""
+    dies, factory = _REBUILDS[case]
+    build, serve = factory(spark)
+    root = str(tmp_path / case)
+    build(root, 1)
+    before = sorted(map(tuple, serve(root).collect()))
+    pin = index_current(root)
+
+    orig = SN.snapshot_commit_partitioned
+
+    def boom(df, path, *a, **kw):
+        if os.path.basename(path) == dies:
+            raise _Interrupted(f"{dies} commit died")
+        return orig(df, path, *a, **kw)
+
+    monkeypatch.setattr(SN, "snapshot_commit_partitioned", boom)
+    with pytest.raises(_Interrupted):
+        build(root, 3)
+    monkeypatch.setattr(SN, "snapshot_commit_partitioned", orig)
+
+    assert index_current(root) == pin
+    after = sorted(map(tuple, serve(root).collect()))
+    assert after == before and after
 
 
 def test_maintenance_republishes_and_prepointer_roots_still_serve(

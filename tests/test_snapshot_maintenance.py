@@ -144,9 +144,8 @@ def test_compaction_then_rotation_releases_old_dirs(spark, tmp_path):
 
 
 def test_compaction_coalesces_to_one_file_per_partition(spark, tmp_path):
-    """one_file_per_partition=True (default) writes each rewritten
-    partition as a single parquet file — the small-file half of
-    OPTIMIZE; False inherits the plan's parallelism."""
+    """Compaction writes each rewritten partition as a single parquet
+    file — the small-file half of OPTIMIZE."""
     from etl_pulumi_aws_snowflake_spark.streaming.snapshot import snapshot_compact
 
     root = str(tmp_path / "snap")
@@ -185,7 +184,7 @@ def test_compaction_clusters_rewritten_partitions(spark, tmp_path):
     for p in rewritten:
         d = os.path.join(root, v, "data", f"_p={p}")
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) == 1  # one_file_per_partition default held
+        assert len(files) == 1  # one file per rewritten partition
         ks = pq.read_table(os.path.join(d, files[0]), columns=["k"])[
             "k"
         ].to_pylist()

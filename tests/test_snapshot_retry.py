@@ -191,88 +191,3 @@ def test_full_rewrite_is_rejected_up_front(spark, seeded):
         snapshot_commit_partitioned_retry(
             df, root, "part", changed_values=None, expected_current=v1,
         )
-
-
-# --------------------------------------------------------------------
-# index-pin publish retry (the index-family half of the story)
-# --------------------------------------------------------------------
-
-from etl_pulumi_aws_snowflake_spark.streaming.snapshot import (  # noqa: E402
-    index_current,
-    index_publish,
-    index_publish_retry,
-)
-
-
-def test_index_disjoint_member_publishes_both_survive(tmp_path):
-    root = str(tmp_path / "idx")
-    v1 = index_publish(root, {"corpus": "v-00001", "postings": "v-00001"})
-    # racer moves postings
-    index_publish(
-        root, {"corpus": "v-00001", "postings": "v-00002"},
-        expected_current=v1,
-    )
-    # loser derived a corpus append from v1 — stale token, disjoint
-    v3 = index_publish_retry(
-        root, {"corpus": "v-00002"}, expected_current=v1,
-    )
-    assert v3 == "v-00003"
-    assert index_current(root) == {
-        "corpus": "v-00002", "postings": "v-00002",
-    }, "the racer's member movement must carry forward"
-
-
-def test_index_same_member_race_raises(tmp_path):
-    root = str(tmp_path / "idx")
-    v1 = index_publish(root, {"corpus": "v-00001"})
-    index_publish(root, {"corpus": "v-00002"}, expected_current=v1)
-    with pytest.raises(SnapshotConflictError, match="moved members"):
-        index_publish_retry(
-            root, {"corpus": "v-00003"}, expected_current=v1,
-        )
-    assert index_current(root) == {"corpus": "v-00002"}
-
-
-def test_index_first_publish_retry_from_empty_root(tmp_path):
-    root = str(tmp_path / "idx")
-    v = index_publish_retry(root, {"meta": "v-00001"}, expected_current=None)
-    assert v == "v-00001"
-    assert index_current(root) == {"meta": "v-00001"}
-
-
-def test_index_gcd_base_pin_is_conservative(tmp_path):
-    root = str(tmp_path / "idx")
-    v1 = index_publish(root, {"a": "v-00001"}, keep=1)
-    index_publish(root, {"a": "v-00001", "b": "v-00001"},
-                  expected_current=v1, keep=1)
-    index_publish(root, {"a": "v-00001", "c": "v-00001"}, keep=1)
-    # keep=1 GC'd v1's dir — the base pin is unreadable
-    with pytest.raises(SnapshotConflictError, match="base pin"):
-        index_publish_retry(
-            root, {"d": "v-00001"}, expected_current=v1, keep=1,
-        )
-
-
-def test_index_retry_exhaustion_under_publish_storm(tmp_path):
-    from etl_pulumi_aws_snowflake_spark.streaming import snapshot as S
-
-    root = str(tmp_path / "idx")
-    v1 = index_publish(root, {"a": "v-00001", "b": "v-00001"})
-    real = S.index_publish
-    hits = []
-
-    def storm(*args, **kwargs):
-        hits.append(1)
-        real(root, {**index_current(root), "b": f"v-{len(hits):05d}"})
-        return real(*args, **kwargs)
-
-    orig = S.index_publish
-    S.index_publish = storm
-    try:
-        with pytest.raises(SnapshotConflictError, match="live version moved"):
-            S.index_publish_retry(
-                root, {"a": "v-00002"}, expected_current=v1, max_retries=2,
-            )
-    finally:
-        S.index_publish = orig
-    assert len(hits) == 3

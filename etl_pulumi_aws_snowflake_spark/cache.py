@@ -51,16 +51,27 @@ _PENDING: list[tuple[DataFrame, int]] = []
 #: raw-RDD storage release_deferred will sweep.
 _TRACKED_RDD_IDS: set[int] = set()
 _LAST_QUERY: str | None = None
+#: Count of every registration into the pool or the tracked ids ever
+#: made; the query registry's plan cache refuses a build that moved it.
+_REGISTRATIONS = 0
+
+
+def registrations() -> int:
+    """How many persists and localCheckpoints this module has
+    registered so far in the process."""
+    return _REGISTRATIONS
 
 
 def query_boundary(spark, name: str) -> int:
-    """Called by the query registry when query ``name`` starts.  If a
-    DIFFERENT query ran before, release its deferred persists and
-    tracked localCheckpoint storage; repeat invocations of the SAME
-    query keep their caches — CacheManager matches the identical
-    analyzed plan, so back-to-back reps (bench's min-of-5) legitimately
-    share the materialized subtree, exactly like a warehouse plan
-    cache."""
+    """Called by the query registry when query ``name`` starts, on
+    every call, whether or not its plan is served from the registry's
+    plan cache.  If a DIFFERENT query ran before, release its deferred
+    persists and tracked localCheckpoint storage; repeat invocations
+    of the SAME query keep their caches, so back-to-back reps (bench's
+    min-of-5) share the materialized subtree through CacheManager,
+    which matches the identical analyzed plan.  A build that registers
+    anything here is never served from the plan cache, so each of its
+    calls re-registers what the next boundary releases."""
     global _LAST_QUERY
     with _LOCK:
         if name == _LAST_QUERY:
@@ -76,8 +87,10 @@ def deferred_persist(df: DataFrame, level=None) -> DataFrame:
         df.persist(level)
     else:
         df.persist()
+    global _REGISTRATIONS
     with _LOCK:
         _PENDING.append((df, threading.get_ident()))
+        _REGISTRATIONS += 1
     return df
 
 
@@ -168,8 +181,10 @@ def tracked_local_checkpoint(df: DataFrame) -> DataFrame:
     before = _persistent_rdd_ids(spark)
     out = df.localCheckpoint()
     after = _persistent_rdd_ids(spark)
+    global _REGISTRATIONS
     with _LOCK:
         _TRACKED_RDD_IDS.update(after - before)
+        _REGISTRATIONS += 1
     return out
 
 

@@ -10,8 +10,12 @@ DataFrames; :func:`register_views` provides the catalog-name access path
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import jobs_submitted
 
 TABLE_NAMES = (
     "region",
@@ -27,6 +31,39 @@ TABLE_NAMES = (
 )
 
 
+def table_version(path: str) -> tuple[int, int] | None:
+    """``(st_ino, st_mtime_ns)`` of a local table path.  Rewriting the
+    table changes it: a new directory, a file added to or removed from
+    the directory, or a new write of a one-file table.  None for a path
+    that is not local: there is no cheap version to key on."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_mtime_ns)
+
+
+#: Per-thread list that :func:`load_table` appends each returned scan to
+#: while a :func:`recording_loads` block is open.
+_LOADS = threading.local()
+
+
+@contextmanager
+def recording_loads():
+    """Yield a list that collects ``(path, version, relation_id,
+    scan_jobs)`` for every :func:`load_table` call this thread makes
+    inside the block.  ``relation_id`` is the identity hash of the
+    scan's file relation, which the scan keeps in every plan built on
+    it; ``scan_jobs`` counts the Spark jobs the call ran to create the
+    scan (parquet schema inference), 0 when the scan was cached."""
+    outer = getattr(_LOADS, "current", None)
+    _LOADS.current = loads = []
+    try:
+        yield loads
+    finally:
+        _LOADS.current = outer
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table. Column pruning + predicate pushdown reach
     the parquet reader because this stays a plain declarative scan.
@@ -36,27 +73,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     file-listing/footer reads when many queries touch the same table.
     The cache lives on the session object so it dies with the session
     (a global keyed by id() could alias a new session after restart).
-    A cached scan is reused only while the table path's inode and mtime
-    are unchanged: a table rewritten in a live session (new directory,
-    or files added or removed) gets a fresh scan instead of one whose
-    file listing names files that are gone.
+    A cached scan is reused only while :func:`table_version` of the
+    table path is unchanged: a table rewritten in a live session gets
+    a fresh scan instead of one whose file listing names files that
+    are gone.
     """
     cache = getattr(spark, "_etl_scan_cache", None)
     if cache is None:
         cache = {}
         spark._etl_scan_cache = cache
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        st = os.stat(path)
-        version = (st.st_ino, st.st_mtime_ns)
-    except OSError:  # not a local path: no cheap version to key on
-        version = None
+    version = table_version(path)
     hit = cache.get((sf_dir, name))
-    if hit is not None and hit[0] == version:
-        return hit[1]
-    df = _normalize_nanos(spark.read.parquet(path))
-    cache[(sf_dir, name)] = (version, df)
-    return df
+    scan_jobs = 0
+    if hit is None or hit[0] != version:
+        jobs = jobs_submitted(spark)
+        df = _normalize_nanos(spark.read.parquet(path))
+        scan_jobs = jobs_submitted(spark) - jobs
+        relation = df._jdf.queryExecution().analyzed().collectLeaves().head().relation()
+        hit = (version, df, spark._jvm.System.identityHashCode(relation))
+        cache[(sf_dir, name)] = hit
+    loads = getattr(_LOADS, "current", None)
+    if loads is not None:
+        loads.append((path, version, hit[2], scan_jobs))
+    return hit[1]
 
 
 def _normalize_nanos(df: DataFrame) -> DataFrame:

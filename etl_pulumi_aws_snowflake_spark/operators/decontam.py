@@ -82,32 +82,10 @@ def contamination_semantic_indexed(
     Unlike top-k search there is NO self-exclusion: an eval probe that
     IS a corpus member is the definition of verbatim contamination and
     must flag itself (cos 1.0)."""
-    import os
+    from .similarity import ARROW_SCORE_MIN_ROUTED, _routed_read, _score_pairs
 
-    from ..cache import deferred_persist
-    from ..streaming.snapshot import index_current, snapshot_read
-    from .similarity import (
-        ARROW_SCORE_MIN_ROUTED,
-        _route_probes,
-        _routed_lists,
-        _score_pairs,
-    )
-
-    spark = eval_probes.sparkSession
-    pin = index_current(root, fs=fs) or {}
-    seeds = snapshot_read(
-        spark, os.path.join(root, "seeds"), fs=fs, version=pin.get("seeds")
-    )
-    probe_lists = deferred_persist(
-        _route_probes(eval_probes, seeds, nprobe)
-    )
-    wanted, n_routed = _routed_lists(probe_lists)
-    assigned = snapshot_read(
-        spark,
-        os.path.join(root, "corpus"),
-        partition_values=wanted,
-        fs=fs,
-        version=pin.get("corpus"),
+    _, _, probe_lists, assigned, n_routed = _routed_read(
+        eval_probes, root, nprobe, "corpus", fs
     )
     pa, ca = probe_lists.alias("a"), assigned.alias("b")
     hits = _score_pairs(

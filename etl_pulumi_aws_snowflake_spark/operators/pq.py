@@ -23,9 +23,13 @@ no shuffle, the codebooks cross-join as ONE broadcast row.
 
 Approximation quality is the recall entry's job; like int8, PQ holds
 recall structurally only through the re-rank tier
-(:func:`ivf_topk_indexed_pq_rerank` — same survivor-pruned float
-re-score as the int8 ADC path, ``similarity.MAX_RERANK_IDS`` cap and
-pushed ``vec_id IN`` filter included).
+(:func:`ivf_topk_indexed_pq_rerank`).  PQ has no serve code of its
+own beyond ADC scoring: both PQ serves read through
+``similarity._routed_read`` and rank through ``similarity._top_k``
+like every IVF serve, and the re-rank IS the int8 one
+(``similarity._rerank`` with :func:`_pq_candidates` as its candidate
+function — one survivor cut, one ``similarity.MAX_RERANK_IDS`` cap,
+one pushed ``vec_id IN`` filter and float re-score).
 
 Judged entries freeze DETERMINISTIC codebooks (the same hash-rank pick
 as the coarse seeds, truncated per subspace) so the oracle can replay
@@ -58,12 +62,12 @@ from ..cache import deferred_persist
 from ..functions.localrel import local_frame
 from .similarity import (
     ARROW_SCORE_MIN_ROUTED,
-    MAX_RERANK_IDS,
     _ivf_mutate,
     _prep,
-    _route_probes,
-    _routed_lists,
+    _rerank,
+    _routed_read,
     _seeds_assigned_once,
+    _top_k,
     seed_rank_hash,
 )
 
@@ -640,33 +644,25 @@ def _pq_meta(spark, root: str, fs, pin: dict) -> tuple[int, int, int, bool]:
 def _pq_candidates(
     probes: DataFrame, root: str, nprobe: int, fs, pin: dict | None = None
 ) -> DataFrame:
-    """Shared ADC candidate scoring — (probe_id, v, nrm, vec_id,
-    list_id, pcos): full-precision probe routing, partition-pruned PQ
-    corpus read, codebooks cross-joined as one broadcast row, the
-    whole score inside codegen."""
-    from ..streaming.snapshot import index_current, snapshot_read
+    """The ADC candidate function of the PQ-only serve and of the
+    shared re-rank (``similarity._rerank``) — (probe_id, v, nrm,
+    vec_id, list_id, pcos): the shared routed read
+    (``similarity._routed_read``) of the ``corpus_pq`` member, then
+    ADC scoring with the pinned codebooks cross-joined as one
+    broadcast row (the expression tier) or shipped as a LUT matrix
+    (the Arrow tier)."""
+    from ..streaming.snapshot import snapshot_read
 
     spark = probes.sparkSession
-    if pin is None:
-        pin = index_current(root, fs=fs) or {}
-    m, codes, sd, residual = _pq_meta(spark, root, fs, pin)
-    seeds = snapshot_read(
-        spark, os.path.join(root, "seeds"), fs=fs, version=pin.get("seeds")
+    pin, seeds, probe_lists, pq_corpus, n_routed = _routed_read(
+        probes, root, nprobe, "corpus_pq", fs, pin
     )
+    m, codes, sd, residual = _pq_meta(spark, root, fs, pin)
     cb = snapshot_read(
         spark,
         os.path.join(root, "pq_codebooks"),
         fs=fs,
         version=pin.get("pq_codebooks"),
-    )
-    probe_lists = deferred_persist(_route_probes(probes, seeds, nprobe))
-    wanted, n_routed = _routed_lists(probe_lists)
-    pq_corpus = snapshot_read(
-        spark,
-        os.path.join(root, "corpus_pq"),
-        partition_values=wanted,
-        fs=fs,
-        version=pin.get("corpus_pq"),
     )
     # Residual tier: codes reconstruct v̂ = centroid + Σ codewords, so
     # the dot estimate gains the exact probe·centroid term.  It
@@ -836,13 +832,7 @@ def ivf_topk_indexed_pq(
     codes instead of vectors; scoring is the deterministic ADC fold, so
     the oracle judges pcos EXACTLY (ranking quality vs exact is the
     recall entry's job, held structurally by the re-rank serve)."""
-    cand = _pq_candidates(probes, root, nprobe, fs)
-    w = Window.partitionBy("probe_id").orderBy(F.desc("pcos"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "vec_id", "pcos")
-    )
+    return _top_k(_pq_candidates(probes, root, nprobe, fs), "pcos", k)
 
 
 def ivf_topk_indexed_pq_rerank(
@@ -857,72 +847,14 @@ def ivf_topk_indexed_pq_rerank(
     per-probe top-``m·k`` by ADC estimate, then ONLY those survivors
     re-score against the full-precision payload — (probe_id, rank,
     vec_id, cos) by exact cosine.  Requires ``rerank_payload=True`` at
-    build; same survivor-collect bound (:data:`MAX_RERANK_IDS`),
-    pushed ``vec_id IN`` filter, list-pruned float read, and
-    pin-authoritative stale-dir guard as the int8 rerank serve."""
-    from ..streaming.snapshot import index_current, snapshot_read
-    from .similarity import _score_pairs
-
-    spark = probes.sparkSession
-    pin = index_current(root, fs=fs) or {}
-    # The build-shape guard comes FIRST (pure metadata): an ADC-only
-    # build must raise even when the probe set routes to empty lists —
-    # the empty-survivors early return below must never mask it
-    # (review r13).
-    if pin and "corpus" not in pin:
-        raise ValueError(
-            f"ivf_topk_indexed_pq_rerank: the index pin at {root!r} has "
-            "no 'corpus' member — this is not a rerank_payload=True "
-            "build; rebuild with rerank_payload=True or serve via "
-            "ivf_topk_indexed_pq (ADC-only)"
-        )
-    wq = Window.partitionBy("probe_id").orderBy(F.desc("pcos"), F.asc("vec_id"))
-    cand = deferred_persist(
-        _pq_candidates(probes, root, nprobe, fs, pin=pin)
-        .withColumn("qrank", F.row_number().over(wq))
-        .filter(F.col("qrank") <= m * k)
-        .select("probe_id", "v", "nrm", "vec_id", "list_id")
-    )
-    rows = (
-        cand.select("vec_id", "list_id")
-        .distinct()
-        .limit(MAX_RERANK_IDS + 1)
-        .collect()
-    )
-    if len(rows) > MAX_RERANK_IDS:
-        raise ValueError(
-            f"ivf_topk_indexed_pq_rerank: more than {MAX_RERANK_IDS} "
-            "re-rank survivors — the probe set is corpus-sized; use "
-            "cosine_topk (distributed join) instead"
-        )
-    if not rows:
-        return cand.select(
-            "probe_id", F.lit(1).alias("rank"), "vec_id", F.lit(0.0).alias("cos")
-        ).filter(F.lit(False))
-    ids = sorted({r["vec_id"] for r in rows})
-    lists = sorted({r["list_id"] for r in rows})
-    full = snapshot_read(
-        spark,
-        os.path.join(root, "corpus"),
-        partition_values=lists,
-        fs=fs,
-        version=pin.get("corpus"),
-    ).filter(F.col("vec_id").isin(ids))
-    a, b = cand.alias("a"), full.alias("b")
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        _score_pairs(
-            F.broadcast(a).join(b, F.col("a.vec_id") == F.col("b.vec_id")),
-            [
-                F.col("a.probe_id").alias("probe_id"),
-                F.col("b.vec_id").alias("vec_id"),
-            ],
-            # the survivor count already collected above picks the tier
-            use_arrow=len(rows) >= ARROW_SCORE_MIN_ROUTED,
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "vec_id", "cos")
+    build.  This is ``similarity._rerank`` — the int8 rerank serve's
+    own code, with :func:`_pq_candidates` as the candidate function:
+    the survivor-collect bound (``similarity.MAX_RERANK_IDS``), pushed
+    ``vec_id IN`` filter, list-pruned float read and pin-authoritative
+    stale-dir guard are shared, not copied."""
+    return _rerank(
+        probes, root, k, nprobe, m, fs,
+        _pq_candidates, "pcos", "ivf_topk_indexed_pq", "ADC",
     )
 
 

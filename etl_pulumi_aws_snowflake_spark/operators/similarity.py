@@ -202,6 +202,39 @@ def _routed_lists(probe_lists: DataFrame) -> tuple[list, int]:
     return sorted(r["list_id"] for r in rows), sum(r["count"] for r in rows)
 
 
+def _routed_read(
+    probes: DataFrame, root: str, nprobe: int, member: str, fs, pin=None
+):
+    """The one routed read of every IVF serve (float, int8, PQ,
+    semantic decontam): resolve the index pin once (unless the caller
+    already holds it), route the probes against the PINNED frozen seed
+    table, collect the routed list ids, and open ONLY those lists'
+    partitions of the payload ``member`` at its pinned version —
+    ``(pin, seeds, probe_lists, pruned_member, n_routed)``.  Each
+    caller keeps its own candidate join and picks its scoring tier
+    from ``n_routed`` (:data:`ARROW_SCORE_MIN_ROUTED`)."""
+    import os
+
+    from ..streaming.snapshot import index_current, snapshot_read
+
+    spark = probes.sparkSession
+    if pin is None:
+        pin = index_current(root, fs=fs) or {}
+    seeds = snapshot_read(
+        spark, os.path.join(root, "seeds"), fs=fs, version=pin.get("seeds")
+    )
+    probe_lists = deferred_persist(_route_probes(probes, seeds, nprobe))
+    wanted, n_routed = _routed_lists(probe_lists)
+    pruned = snapshot_read(
+        spark,
+        os.path.join(root, member),
+        partition_values=wanted,
+        fs=fs,
+        version=pin.get(member),
+    )
+    return pin, seeds, probe_lists, pruned, n_routed
+
+
 def _score_pairs(
     joined: DataFrame,
     cols: list,
@@ -252,19 +285,28 @@ def _pairs(probes: DataFrame, corpus: DataFrame) -> DataFrame:
     )
 
 
+def _top_k(
+    df: DataFrame, score: str, k: int, rank: str = "rank", keep=None
+) -> DataFrame:
+    """Per-probe top-``k`` by ``score`` desc, ties to the lower vec_id —
+    the one ranking rule of every exact and IVF serve, so every result
+    is total-ordered and oracle-replayable.  Returns (probe_id,
+    ``rank``, vec_id, ``score``) unless ``keep`` names the columns."""
+    w = Window.partitionBy("probe_id").orderBy(F.desc(score), F.asc("vec_id"))
+    return (
+        df.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .select(*(keep or ("probe_id", rank, "vec_id", score)))
+    )
+
+
 def cosine_topk(probes: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k nearest (cosine) corpus rows per probe:
     (probe_id, rank, vec_id, cos).  Ties broken by vec_id so the result
     is total-ordered; the window partitions by probe (few probes ⇒
     map-side partial top-k via AQE/codegen, final per-probe sort tiny).
     """
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        _pairs(probes, corpus)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "vec_id", "cos")
-    )
+    return _top_k(_pairs(probes, corpus), "cos", k)
 
 
 #: cosine_topk_blas collects the probe set to the driver and ships it
@@ -334,12 +376,7 @@ def cosine_topk_blas(
             yield pdf_out[np.isfinite(pdf_out["cos"])]
 
     partial = corpus.mapInPandas(part, "probe_id long, vec_id long, cos double")
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "vec_id", "cos")
-    )
+    return _top_k(partial, "cos", k)
 
 
 def cosine_near_pairs(
@@ -973,7 +1010,6 @@ def _rank_candidates(
     ``use_arrow`` picks the vectorized scoring tier when the caller
     knows the routed volume (:data:`ARROW_SCORE_MIN_ROUTED`)."""
     pa, ca = probe_lists.alias("a"), assigned.alias("b")
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     scored = _score_pairs(
         F.broadcast(pa).join(
             ca,
@@ -983,11 +1019,7 @@ def _rank_candidates(
         [F.col("a.probe_id").alias("probe_id"), F.col("b.vec_id").alias("vec_id")],
         use_arrow=use_arrow,
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "vec_id", "cos")
-    )
+    return _top_k(scored, "cos", k)
 
 
 def ivf_build_index(
@@ -1140,23 +1172,8 @@ def ivf_topk_indexed(
     (one ``index_current`` resolve), so a concurrent rebuild/append
     landing mid-serve can never pair new seeds with an old corpus or
     vice versa."""
-    import os
-
-    from ..streaming.snapshot import index_current, snapshot_read
-
-    spark = probes.sparkSession
-    pin = index_current(root, fs=fs) or {}
-    seeds = snapshot_read(
-        spark, os.path.join(root, "seeds"), fs=fs, version=pin.get("seeds")
-    )
-    probe_lists = deferred_persist(_route_probes(probes, seeds, nprobe))
-    wanted, n_routed = _routed_lists(probe_lists)
-    assigned = snapshot_read(
-        spark,
-        os.path.join(root, "corpus"),
-        partition_values=wanted,
-        fs=fs,
-        version=pin.get("corpus"),
+    _, _, probe_lists, assigned, n_routed = _routed_read(
+        probes, root, nprobe, "corpus", fs
     )
     return _rank_candidates(
         probe_lists, assigned, k, use_arrow=n_routed >= ARROW_SCORE_MIN_ROUTED
@@ -1341,46 +1358,21 @@ def ivf_topk_indexed_quantized(
     over exact-integer-valued doubles), so the oracle judges it
     EXACTLY; ranking quality vs the float path is the recall entry's
     job (`sim_ivf_recall_quantized`)."""
-    import os
-
-    from ..streaming.snapshot import snapshot_read
-
-    cand = _q_candidates(probes, root, nprobe, fs)
-    w = Window.partitionBy("probe_id").orderBy(F.desc("qcos"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "vec_id", "qcos")
-    )
+    return _top_k(_q_candidates(probes, root, nprobe, fs), "qcos", k)
 
 
 def _q_candidates(
     probes: DataFrame, root: str, nprobe: int, fs, pin: dict | None = None
 ) -> DataFrame:
-    """Quantized candidate scoring shared by the pure-int8 serve and
-    the re-rank tier: full-precision probe routing, partition-pruned
-    int8 corpus read, asymmetric cosine — (probe_id, v, nrm, vec_id,
-    qcos), probe vector and norm carried through for a re-score
-    phase.  ``pin`` is the serve's resolved index version (member →
-    snapshot version), shared so every member read is consistent."""
-    import os
-
-    from ..streaming.snapshot import index_current, snapshot_read
-
-    spark = probes.sparkSession
-    if pin is None:
-        pin = index_current(root, fs=fs) or {}
-    seeds = snapshot_read(
-        spark, os.path.join(root, "seeds"), fs=fs, version=pin.get("seeds")
-    )
-    probe_lists = deferred_persist(_route_probes(probes, seeds, nprobe))
-    wanted, n_routed = _routed_lists(probe_lists)
-    qcorpus = snapshot_read(
-        spark,
-        os.path.join(root, "corpus_q"),
-        partition_values=wanted,
-        fs=fs,
-        version=pin.get("corpus_q"),
+    """The int8 candidate function of the pure-int8 serve and of the
+    shared re-rank (:func:`_rerank`): the shared routed read
+    (:func:`_routed_read`) of the ``corpus_q`` member, then the
+    asymmetric cosine — (probe_id, v, nrm, vec_id, list_id, qcos),
+    probe vector and norm carried through for a re-score phase.
+    ``pin`` is the serve's resolved index version (member → snapshot
+    version), shared so every member read is consistent."""
+    _, _, probe_lists, qcorpus, n_routed = _routed_read(
+        probes, root, nprobe, "corpus_q", fs, pin
     )
     pa, ca = probe_lists.alias("a"), qcorpus.alias("b")
     # qcos tiered (ARROW_SCORE_MIN_ROUTED): the Arrow kernel promotes
@@ -1450,37 +1442,62 @@ def ivf_topk_indexed_quantized_rerank(
     exact-integer values, cos the same fold as :func:`cosine_topk`),
     both tiebreaks by vec_id — the oracle replays phase 1's cut and
     phase 2's re-rank exactly."""
+    return _rerank(
+        probes, root, k, nprobe, m, fs,
+        _q_candidates, "qcos", "ivf_topk_indexed_quantized", "int8",
+    )
+
+
+def _rerank(
+    probes: DataFrame,
+    root: str,
+    k: int,
+    nprobe: int,
+    m: int,
+    fs,
+    candidates,
+    score: str,
+    serve: str,
+    payload: str,
+) -> DataFrame:
+    """The one ADC + refine re-rank of the int8 and PQ payloads: the
+    ``candidates`` function (:func:`_q_candidates` /
+    ``pq._pq_candidates``) scans the routed compressed lists, the
+    per-probe top-``m·k`` by its ``score`` survive, and ONLY those
+    re-score against the pinned full-precision ``corpus`` member —
+    (probe_id, rank, vec_id, cos).  ``serve`` is the compressed-only
+    serve's name and ``payload`` its label, both for the errors."""
     import os
 
     from ..streaming.snapshot import index_current, snapshot_read
 
     spark = probes.sparkSession
     pin = index_current(root, fs=fs) or {}
-    # The build-shape guard comes FIRST (pure metadata): an int8-only
-    # build must raise even when the probe set routes to empty lists —
-    # the empty-survivors early return below must never mask it
-    # (review r13; the pin-authority rationale is with the float read
-    # below).
+    # The build-shape guard comes FIRST (pure metadata): a
+    # compressed-only build must raise even when the probe set routes
+    # to empty lists — the empty-survivors early return below must
+    # never mask it (review r13).
     if pin and "corpus" not in pin:
         raise ValueError(
-            "ivf_topk_indexed_quantized_rerank: the index pin at "
-            f"{root!r} has no 'corpus' member — this is not a "
-            "rerank_payload=True build; rebuild with "
-            "rerank_payload=True or serve via "
-            "ivf_topk_indexed_quantized (int8-only)"
+            f"{serve}_rerank: the index pin at {root!r} has no 'corpus' "
+            "member — this is not a rerank_payload=True build; rebuild "
+            f"with rerank_payload=True or serve via {serve} "
+            f"({payload}-only)"
         )
-    wq = Window.partitionBy("probe_id").orderBy(F.desc("qcos"), F.asc("vec_id"))
     cand = deferred_persist(
-        _q_candidates(probes, root, nprobe, fs, pin=pin)
-        .withColumn("qrank", F.row_number().over(wq))
-        .filter(F.col("qrank") <= m * k)
-        .select("probe_id", "v", "nrm", "vec_id", "list_id")
+        _top_k(
+            candidates(probes, root, nprobe, fs, pin=pin),
+            score,
+            m * k,
+            rank="qrank",
+            keep=("probe_id", "v", "nrm", "vec_id", "list_id"),
+        )
     )
     # ONE driver job yields both routing scalars: the survivor ids
     # (pushed-down filter) and their list_ids (partition pruning) —
-    # survivors carry list_id from the int8 scan, so the float read
-    # prunes to exactly the lists that hold them (≤ the routed set)
-    # with zero extra IO
+    # survivors carry list_id from the compressed scan, so the float
+    # read prunes to exactly the lists that hold them (≤ the routed
+    # set) with zero extra IO
     rows = (
         cand.select("vec_id", "list_id")
         .distinct()
@@ -1489,9 +1506,9 @@ def ivf_topk_indexed_quantized_rerank(
     )
     if len(rows) > MAX_RERANK_IDS:
         raise ValueError(
-            f"ivf_topk_indexed_quantized_rerank: more than "
-            f"{MAX_RERANK_IDS} re-rank survivors — the probe set is "
-            "corpus-sized; use cosine_topk (distributed join) instead"
+            f"{serve}_rerank: more than {MAX_RERANK_IDS} re-rank "
+            "survivors — the probe set is corpus-sized; use cosine_topk "
+            "(distributed join) instead"
         )
     if not rows:
         return cand.select(
@@ -1514,19 +1531,11 @@ def ivf_topk_indexed_quantized_rerank(
         version=pin.get("corpus"),
     ).filter(F.col("vec_id").isin(ids))
     a, b = cand.alias("a"), full.alias("b")
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        _score_pairs(
-            F.broadcast(a).join(b, F.col("a.vec_id") == F.col("b.vec_id")),
-            [
-                F.col("a.probe_id").alias("probe_id"),
-                F.col("b.vec_id").alias("vec_id"),
-            ],
-            # len(rows) is the survivor count already collected above —
-            # the re-score pair volume, so it picks the tier for free
-            use_arrow=len(rows) >= ARROW_SCORE_MIN_ROUTED,
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "vec_id", "cos")
+    scored = _score_pairs(
+        F.broadcast(a).join(b, F.col("a.vec_id") == F.col("b.vec_id")),
+        [F.col("a.probe_id").alias("probe_id"), F.col("b.vec_id").alias("vec_id")],
+        # len(rows) is the survivor count already collected above —
+        # the re-score pair volume, so it picks the tier for free
+        use_arrow=len(rows) >= ARROW_SCORE_MIN_ROUTED,
     )
+    return _top_k(scored, "cos", k)

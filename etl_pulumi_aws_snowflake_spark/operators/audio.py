@@ -22,8 +22,9 @@ subtypes, exotic registry codes) raises a loud feature-naming
 ``ValueError`` rather than decoding wrong.
 
 Scale notes (identical to the image tier): payloads travel
-Arrow-batched through iterator ``mapInPandas`` — one Python worker
-streams a whole partition; production source is
+Arrow-batched through :func:`.parallel.map_rows`, the one per-row
+worker (iterator ``mapInPandas``) — one Python worker streams a whole
+partition; production source is
 ``spark.read.format("binaryFile")`` over the audio objects; here
 payloads are synthesized from the documents table so the oracle can
 replay the decoded samples relationally.
@@ -33,11 +34,11 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .parallel import map_rows
 
 #: RFC 2361 names for the format codes we refuse — the error should say
 #: WHAT the payload is, not just that it isn't PCM.
@@ -907,17 +908,11 @@ def g711_samples(media: DataFrame) -> DataFrame:
     segment shift, or sign branch fails on the exact byte that
     triggers it."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[int]] = {"doc_id": [], "idx": [], "linear": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                for i, v in enumerate(decode_g711(payload)["linear"]):
-                    out["doc_id"].append(doc_id)
-                    out["idx"].append(i)
-                    out["linear"].append(v)
-            yield pd.DataFrame(out)
+    def rows(doc_id, payload):
+        linear = decode_g711(payload)["linear"]
+        return [(doc_id, i, v) for i, v in enumerate(linear)]
 
-    return media.mapInPandas(run, G711_SCHEMA)
+    return map_rows(media, ["doc_id", "content"], G711_SCHEMA, rows)
 
 
 def wav_samples(decoded: dict) -> list[tuple]:
@@ -981,18 +976,11 @@ def extract_pcm_features(media: DataFrame) -> DataFrame:
     contract — a wrong chunk-walk offset, a swallowed pad byte, or a
     mis-read data size changes every checksum."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pcms = [decode_wav(p)["pcm"] for p in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": [len(p) for p in pcms],
-                    "checksum": [hashlib.md5(p).hexdigest() for p in pcms],
-                }
-            )
+    def rows(doc_id, payload):
+        pcm = decode_wav(payload)["pcm"]
+        return [(doc_id, len(pcm), hashlib.md5(pcm).hexdigest())]
 
-    return media.mapInPandas(run, PCM_FEATURE_SCHEMA)
+    return map_rows(media, ["doc_id", "content"], PCM_FEATURE_SCHEMA, rows)
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
@@ -1001,45 +989,31 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     amplitude sum (all over the decoded integer samples, so the oracle
     replays them exactly — no float tolerance anywhere)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_wav(payload)
-                if d["sample_format"] == "float":
-                    raise ValueError(
-                        "extract_audio_features is the exact-integer "
-                        "stats contract (LongType peak/amp_sum); "
-                        "IEEE-float payloads need a float-stats "
-                        "extractor, not a silent cast"
-                    )
-                flat = [v for frame in wav_samples(d) for v in frame]
-                rows.append(
-                    (
-                        doc_id,
-                        d["n_frames"],
-                        d["sample_rate"],
-                        d["duration_us"],
-                        # a zero-frame container is VALID audio; its
-                        # stats are the additive identities, not a
-                        # worker-killing bare max() error (review r14)
-                        max(flat) if flat else 0,
-                        sum(flat),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_frames",
-                    "sample_rate",
-                    "duration_us",
-                    "peak",
-                    "amp_sum",
-                ],
+    def rows(doc_id, payload):
+        d = decode_wav(payload)
+        if d["sample_format"] == "float":
+            raise ValueError(
+                "extract_audio_features is the exact-integer "
+                "stats contract (LongType peak/amp_sum); "
+                "IEEE-float payloads need a float-stats "
+                "extractor, not a silent cast"
             )
+        flat = [v for frame in wav_samples(d) for v in frame]
+        return [
+            (
+                doc_id,
+                d["n_frames"],
+                d["sample_rate"],
+                d["duration_us"],
+                # a zero-frame container is VALID audio; its
+                # stats are the additive identities, not a
+                # worker-killing bare max() error (review r14)
+                max(flat) if flat else 0,
+                sum(flat),
+            )
+        ]
 
-    return media.mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    return map_rows(media, ["doc_id", "content"], AUDIO_FEATURE_SCHEMA, rows)
 
 
 def wav_frames(media: DataFrame) -> DataFrame:
@@ -1048,25 +1022,14 @@ def wav_frames(media: DataFrame) -> DataFrame:
     shape (frame extraction), with the signed-16-LE sample convention
     on the judged path."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[int]] = {
-                "doc_id": [],
-                "frame_no": [],
-                "ch0": [],
-                "ch1": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_wav(payload)
-                if d["channels"] != 2:
-                    raise ValueError(
-                        f"wav_frames expects stereo, got {d['channels']}ch"
-                    )
-                for j, (c0, c1) in enumerate(wav_samples(d)):
-                    out["doc_id"].append(doc_id)
-                    out["frame_no"].append(j)
-                    out["ch0"].append(c0)
-                    out["ch1"].append(c1)
-            yield pd.DataFrame(out)
+    def rows(doc_id, payload):
+        d = decode_wav(payload)
+        if d["channels"] != 2:
+            raise ValueError(
+                f"wav_frames expects stereo, got {d['channels']}ch"
+            )
+        return [
+            (doc_id, j, c0, c1) for j, (c0, c1) in enumerate(wav_samples(d))
+        ]
 
-    return media.mapInPandas(run, FRAME_SCHEMA)
+    return map_rows(media, ["doc_id", "content"], FRAME_SCHEMA, rows)

@@ -235,7 +235,7 @@ def _banded_keys(
         )
     # Measured and REJECTED (r18): spreading the exploded (id, sh)
     # rows up to the core count before this aggregate (the multimodal
-    # `_spread` pattern).  Interleaved A/B on the bench fixture read
+    # `_encoded` spread).  Interleaved A/B on the bench fixture read
     # the spread variant ~15% SLOWER end-to-end — the extra round-robin
     # exchange costs more than parallelizing the 16-way partial min
     # saves at ~80k exploded rows — and at scale the scan already has

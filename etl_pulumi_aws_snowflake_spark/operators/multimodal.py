@@ -1,8 +1,9 @@
 """Multimodal (binary) column plumbing (SURVEY.md §2.10).
 
 Images/audio/video are opaque ``binary`` payloads plus a typed metadata
-struct.  The Spark-side contract — schema, Arrow batch shape, iterator
-``mapInPandas`` signature, partition sizing — is real and tested.
+struct.  The Spark-side contract — schema, Arrow batch shape, the one
+per-row worker :func:`.parallel.map_rows`, partition sizing — is real
+and tested.
 :func:`decode_image` decodes binary PPM/PGM, PNG, and baseline JPEG
 payloads from scratch (no codec library needed — the three real pixel
 tiers in this container); other formats use PIL when importable or
@@ -11,8 +12,9 @@ through unchanged so the distributed plumbing stays testable with
 arbitrary bytes.
 
 Scale notes:
-- payloads travel Arrow-batched through ``mapInPandas`` (iterator form:
-  one Python worker handles a whole partition without materializing it);
+- payloads travel Arrow-batched through :func:`.parallel.map_rows`
+  (iterator ``mapInPandas`` form: one Python worker handles a whole
+  partition without materializing it);
 - ``spark.read.format("binaryFile")`` is the production source for
   media files; here payloads are synthesized from the documents table;
 - keep binary partitions small (``maxPartitionBytes``) — a 128 MB
@@ -23,9 +25,8 @@ Scale notes:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -35,6 +36,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .parallel import map_rows, spread_to_cores
 
 MEDIA_SCHEMA = StructType(
     [
@@ -54,18 +57,50 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the core count for the codec
-    tiers — the most CPU-expensive per-row work in the engine; the
-    r18 profile measured the whole JPEG entry serialized on 1 task of
-    32 cores behind a single-row-group scan split.  Shared logic (and
-    the full scale-correctness rationale) lives in
-    :func:`..operators.parallel.spread_to_cores`; what this call
-    shuffles when it fires is the pruned (doc_id, text) projection,
-    never a decoded payload."""
-    from .parallel import spread_to_cores
+def _encoded(
+    docs: DataFrame, text_col: str, mime: str, encode: Callable[[str], bytes]
+) -> DataFrame:
+    """Documents → ``MEDIA_SCHEMA`` rows whose payload is
+    ``encode(sha256 hex of the text)``: the worker pass of the Python
+    encoders.  The (doc_id, text) projection is round-robin spread up
+    to the core count first — these encoders are the most CPU-expensive
+    per-row work in the engine, and the r18 profile measured the whole
+    JPEG entry serialized on 1 task of 32 cores behind a
+    single-row-group scan split.  The scale-correctness rationale
+    lives in :func:`.parallel.spread_to_cores`; what it shuffles when
+    it fires is the pruned projection, never a payload."""
 
-    return spread_to_cores(df)
+    def rows(doc_id, text):
+        payload = encode(hashlib.sha256(text.encode("utf-8")).hexdigest())
+        return [(doc_id, payload, mime, len(payload))]
+
+    return map_rows(
+        spread_to_cores(docs.select("doc_id", text_col)),
+        ["doc_id", text_col],
+        MEDIA_SCHEMA,
+        rows,
+    )
+
+
+def _hex_media(
+    docs: DataFrame, text_col: str, container: bytes, n: int, mime: str
+) -> DataFrame:
+    """Constant-header payloads built in codegen: ``container`` is one
+    encoded file whose last ``n`` bytes are the raster/sample bytes;
+    every row keeps its header and puts the first ``n`` sha256-hex
+    characters of the text in their place."""
+    header = container[: len(container) - n]
+    return docs.select(
+        "doc_id",
+        F.concat(
+            F.lit(header),
+            F.encode(
+                F.substring(F.sha2(F.col(text_col), 256), 1, n), "UTF-8"
+            ),
+        ).alias("content"),
+        F.lit(mime).alias("mime"),
+        F.lit(len(header) + n).cast("long").alias("n_bytes"),
+    )
 
 
 def as_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -120,7 +155,7 @@ def as_png(
     CRCs, per-scanline filters cycling 0–4 so every unfiltering
     algorithm sits on the judged path; with the default 5 rows all
     five occur).  Container construction needs zlib, so unlike as_ppm
-    this builds payloads in an Arrow-batched ``mapInPandas`` worker —
+    this builds payloads in the Arrow-batched ``map_rows`` worker —
     the production shape for any encoder.  Requires ``3·w·h <= 64``
     (one sha256's hex length)."""
     n = width * height * 3
@@ -129,29 +164,14 @@ def as_png(
             f"as_png: {width}x{height} RGB needs {n} raster bytes, more "
             "than one sha256 hex string provides (64)"
         )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png(
-                    hashlib.sha256(t.encode("utf-8")).hexdigest()[:n].encode(),
-                    width,
-                    height,
-                    color_type=2,
-                    filter_choice=None,
-                )
-                for t in pdf[text_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": payloads,
-                    "mime": "image/png",
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return _spread(docs.select("doc_id", text_col)).mapInPandas(run, MEDIA_SCHEMA)
+    return _encoded(
+        docs,
+        text_col,
+        "image/png",
+        lambda hx: encode_png(
+            hx[:n].encode(), width, height, color_type=2, filter_choice=None
+        ),
+    )
 
 
 def as_wav(
@@ -182,19 +202,7 @@ def as_wav(
             (b"LIST", b"INFO" + _chunk(b"ISFT", b"spark-graft\x00")),
         ),
     )
-    header = container[: len(container) - n_samples]
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.lit(header),
-            F.encode(
-                F.substring(F.sha2(F.col(text_col), 256), 1, n_samples),
-                "UTF-8",
-            ),
-        ).alias("content"),
-        F.lit("audio/wav").alias("mime"),
-        F.lit(len(header) + n_samples).cast("long").alias("n_bytes"),
-    )
+    return _hex_media(docs, text_col, container, n_samples, "audio/wav")
 
 
 def as_wav16(
@@ -218,18 +226,7 @@ def as_wav16(
     container = encode_wav(
         b"\x00" * n, sample_rate=16000, bits_per_sample=16, channels=2
     )
-    header = container[: len(container) - n]
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.lit(header),
-            F.encode(
-                F.substring(F.sha2(F.col(text_col), 256), 1, n), "UTF-8"
-            ),
-        ).alias("content"),
-        F.lit("audio/wav").alias("mime"),
-        F.lit(len(header) + n).cast("long").alias("n_bytes"),
-    )
+    return _hex_media(docs, text_col, container, n, "audio/wav")
 
 
 #: The constant 256-entry PLTE used by the judged palette entry:
@@ -255,30 +252,19 @@ def as_png_palette(
             f"as_png_palette: {width}x{height} needs {n} index bytes, "
             "more than one sha256 hex string provides (64)"
         )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png(
-                    hashlib.sha256(t.encode("utf-8")).hexdigest()[:n].encode(),
-                    width,
-                    height,
-                    color_type=3,
-                    filter_choice=None,
-                    palette=PNG_TEST_PALETTE,
-                )
-                for t in pdf[text_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": payloads,
-                    "mime": "image/png",
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return _spread(docs.select("doc_id", text_col)).mapInPandas(run, MEDIA_SCHEMA)
+    return _encoded(
+        docs,
+        text_col,
+        "image/png",
+        lambda hx: encode_png(
+            hx[:n].encode(),
+            width,
+            height,
+            color_type=3,
+            filter_choice=None,
+            palette=PNG_TEST_PALETTE,
+        ),
+    )
 
 
 PIXEL_SCHEMA = StructType(
@@ -298,22 +284,14 @@ def image_pixels(media: DataFrame) -> DataFrame:
     VALUE-judge the decoded channels directly instead of hiding them
     under an md5 (the same discipline as ``jpeg_mcu_colors``)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[int]] = {
-                k: [] for k in ("doc_id", "px", "r", "g", "b")
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                rgb = decode_image(bytes(payload))
-                for px in range(len(rgb) // 3):
-                    out["doc_id"].append(doc_id)
-                    out["px"].append(px)
-                    out["r"].append(rgb[px * 3])
-                    out["g"].append(rgb[px * 3 + 1])
-                    out["b"].append(rgb[px * 3 + 2])
-            yield pd.DataFrame(out)
+    def rows(doc_id, payload):
+        rgb = decode_image(bytes(payload))
+        return [
+            (doc_id, px, rgb[px * 3], rgb[px * 3 + 1], rgb[px * 3 + 2])
+            for px in range(len(rgb) // 3)
+        ]
 
-    return media.mapInPandas(run, PIXEL_SCHEMA)
+    return map_rows(media, ["doc_id", "content"], PIXEL_SCHEMA, rows)
 
 
 def as_g711(
@@ -331,19 +309,7 @@ def as_g711(
     from .audio import encode_g711
 
     container = encode_g711(b"\x00" * n_codes, law=law)
-    header = container[: len(container) - n_codes]
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.lit(header),
-            F.encode(
-                F.substring(F.sha2(F.col(text_col), 256), 1, n_codes),
-                "UTF-8",
-            ),
-        ).alias("content"),
-        F.lit(f"audio/{law}").alias("mime"),
-        F.lit(len(header) + n_codes).cast("long").alias("n_bytes"),
-    )
+    return _hex_media(docs, text_col, container, n_codes, f"audio/{law}")
 
 
 def as_y4m(
@@ -393,29 +359,17 @@ def as_jpeg_gray(docs: DataFrame, text_col: str = "text") -> DataFrame:
     payload is a genuine SOF0 stream: Annex-K Huffman tables in DHT,
     DC prediction chained across the four blocks, EOB-coded ACs.
     Encoders are codec-bound, so like :func:`as_png` this builds
-    payloads in the Arrow-batched ``mapInPandas`` worker."""
+    payloads in the Arrow-batched ``map_rows`` worker."""
     from .jpeg import encode_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t_ in pdf[text_col]:
-                hx = hashlib.sha256(t_.encode("utf-8")).hexdigest()
-                raster = bytearray()
-                for yy in range(16):
-                    for xx in range(16):
-                        raster.append(ord(hx[(yy // 8) * 2 + (xx // 8)]))
-                payloads.append(encode_jpeg(bytes(raster), 16, 16))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": payloads,
-                    "mime": "image/jpeg",
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def encode(hx: str) -> bytes:
+        raster = bytearray()
+        for yy in range(16):
+            for xx in range(16):
+                raster.append(ord(hx[(yy // 8) * 2 + (xx // 8)]))
+        return encode_jpeg(bytes(raster), 16, 16)
 
-    return _spread(docs.select("doc_id", text_col)).mapInPandas(run, MEDIA_SCHEMA)
+    return _encoded(docs, text_col, "image/jpeg", encode)
 
 
 def as_jpeg_color(
@@ -433,38 +387,24 @@ def as_jpeg_color(
     predictor reset (before 2) are both on the judged path."""
     from .jpeg import encode_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t_ in pdf[text_col]:
-                hx = hashlib.sha256(t_.encode("utf-8")).hexdigest()
-                raster = bytearray()
-                for yy in range(16):
-                    for xx in range(48):
-                        i = xx // 16
-                        raster += bytes(
-                            (ord(hx[3 * i]), ord(hx[3 * i + 1]), ord(hx[3 * i + 2]))
-                        )
-                payloads.append(
-                    encode_jpeg(
-                        bytes(raster),
-                        48,
-                        16,
-                        color=True,
-                        subsample=True,
-                        restart_interval=restart_interval,
-                    )
+    def encode(hx: str) -> bytes:
+        raster = bytearray()
+        for yy in range(16):
+            for xx in range(48):
+                i = xx // 16
+                raster += bytes(
+                    (ord(hx[3 * i]), ord(hx[3 * i + 1]), ord(hx[3 * i + 2]))
                 )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": payloads,
-                    "mime": "image/jpeg",
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+        return encode_jpeg(
+            bytes(raster),
+            48,
+            16,
+            color=True,
+            subsample=True,
+            restart_interval=restart_interval,
+        )
 
-    return _spread(docs.select("doc_id", text_col)).mapInPandas(run, MEDIA_SCHEMA)
+    return _encoded(docs, text_col, "image/jpeg", encode)
 
 
 def jpeg_mcu_colors(media: DataFrame, mcu_px: int = 16) -> DataFrame:
@@ -487,30 +427,22 @@ def jpeg_mcu_colors(media: DataFrame, mcu_px: int = 16) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "mcu", "r", "g", "b")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                width, height, rgb = decode_jpeg(bytes(payload))
-                for i in range(width // mcu_px):
-                    px0 = rgb[(i * mcu_px) * 3 : (i * mcu_px) * 3 + 3]
-                    for yy in range(height):
-                        for xx in range(mcu_px):
-                            off = (yy * width + i * mcu_px + xx) * 3
-                            if rgb[off : off + 3] != px0:
-                                raise ValueError(
-                                    f"doc {doc_id} MCU {i}: decoded band "
-                                    "not uniform — constant-block decode "
-                                    "is broken"
-                                )
-                    rows["doc_id"].append(doc_id)
-                    rows["mcu"].append(i)
-                    rows["r"].append(px0[0])
-                    rows["g"].append(px0[1])
-                    rows["b"].append(px0[2])
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        width, height, rgb = decode_jpeg(bytes(payload))
+        for i in range(width // mcu_px):
+            px0 = rgb[(i * mcu_px) * 3 : (i * mcu_px) * 3 + 3]
+            for yy in range(height):
+                for xx in range(mcu_px):
+                    off = (yy * width + i * mcu_px + xx) * 3
+                    if rgb[off : off + 3] != px0:
+                        raise ValueError(
+                            f"doc {doc_id} MCU {i}: decoded band "
+                            "not uniform — constant-block decode "
+                            "is broken"
+                        )
+            yield (doc_id, i, px0[0], px0[1], px0[2])
 
-    return media.mapInPandas(run, schema)
+    return map_rows(media, ["doc_id", "content"], schema, rows)
 
 
 try:  # real decode path where a codec library exists (not this container)
@@ -1010,18 +942,7 @@ def as_bmp(docs: DataFrame, text_col: str = "text") -> DataFrame:
     padding dropped) are byte-exact replayable in SQL as a fixed
     permutation of hex-char positions."""
     container = encode_bmp(b"\x00" * 12, 2, 2)
-    header = container[:-16]
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.lit(header),
-            F.encode(
-                F.substring(F.sha2(F.col(text_col), 256), 1, 16), "UTF-8"
-            ),
-        ).alias("content"),
-        F.lit("image/bmp").alias("mime"),
-        F.lit(len(header) + 16).cast("long").alias("n_bytes"),
-    )
+    return _hex_media(docs, text_col, container, 16, "image/bmp")
 
 
 def _decode_pnm(payload: bytes) -> bytes:
@@ -1168,18 +1089,11 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     ``fake=False`` runs the real decode tier (PPM/PGM always, PIL
     formats where available)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [decode_image(p, fake=fake) for p in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": [len(p) for p in payloads],
-                    "checksum": [hashlib.md5(p).hexdigest() for p in payloads],
-                }
-            )
+    def rows(doc_id, payload):
+        p = decode_image(payload, fake=fake)
+        return [(doc_id, len(p), hashlib.md5(p).hexdigest())]
 
-    return media.mapInPandas(run, FEATURE_SCHEMA)
+    return map_rows(media, ["doc_id", "content"], FEATURE_SCHEMA, rows)
 
 
 def resize_media(media: DataFrame, target_bytes: int = 64) -> DataFrame:
@@ -1206,28 +1120,20 @@ def resize_media(media: DataFrame, target_bytes: int = 64) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "in_bytes", "stride", "out_bytes", "out_checksum")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                buf = decode_image(payload, fake=True)
-                n = len(buf)
-                stride = max(1, n // target_bytes)
-                out = buf[::stride]
-                rows["doc_id"].append(doc_id)
-                rows["in_bytes"].append(n)
-                rows["stride"].append(stride)
-                rows["out_bytes"].append(len(out))
-                rows["out_checksum"].append(hashlib.md5(out).hexdigest())
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        buf = decode_image(payload, fake=True)
+        n = len(buf)
+        stride = max(1, n // target_bytes)
+        out = buf[::stride]
+        return [(doc_id, n, stride, len(out), hashlib.md5(out).hexdigest())]
 
-    return media.mapInPandas(run, schema)
+    return map_rows(media, ["doc_id", "content"], schema, rows)
 
 
 def frame_sample(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     """'Frame sampling' for the video-shaped path: emit one row per
     byte-offset sample of each payload (UDTF-shaped explode inside
-    mapInPandas).  Deterministic fake for the codec-bound step; the
+    ``map_rows``).  Deterministic fake for the codec-bound step; the
     per-row → many-rows batch shape is the part a real frame sampler
     shares."""
 
@@ -1239,15 +1145,11 @@ def frame_sample(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frames, vals = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                buf = decode_image(payload, fake=True)
-                for i, off in enumerate(range(0, len(buf), every_n_bytes)):
-                    ids.append(doc_id)
-                    frames.append(i)
-                    vals.append(buf[off])
-            yield pd.DataFrame({"doc_id": ids, "frame_no": frames, "frame_byte": vals})
+    def rows(doc_id, payload):
+        buf = decode_image(payload, fake=True)
+        return [
+            (doc_id, i, buf[off])
+            for i, off in enumerate(range(0, len(buf), every_n_bytes))
+        ]
 
-    return media.mapInPandas(run, schema)
+    return map_rows(media, ["doc_id", "content"], schema, rows)

@@ -1,9 +1,46 @@
-"""Scale-adaptive parallelism helper shared by the CPU-heavy per-row
-operators (r18, guide §2.5 input skew / §2.6 idle capacity)."""
+"""Helpers shared by the CPU-heavy per-row operators: the
+scale-adaptive spread (r18, guide §2.5 input skew / §2.6 idle
+capacity) and :func:`map_rows`, the one Arrow-batched worker every
+codec, media and web operator runs through."""
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable, Iterator, Sequence
+
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType, StructType
+
+
+def map_rows(
+    df: DataFrame,
+    cols: Sequence[str],
+    schema: StructType | str,
+    rows: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """Per-row map in the iterator ``mapInPandas`` form: ``rows(*values)``
+    receives one input row's ``cols`` values and returns or yields that
+    row's output tuples (none, one or many) in ``schema`` order.  Each
+    Arrow batch becomes one pandas frame — also when no row of it
+    emits — whose column names come from ``schema`` (a ``StructType``
+    or a DDL string, parsed here once, before any task runs).  ``df``
+    is mapped as given: no projection is added, so callers prune their
+    own inputs.  The worker closure keeps the name ``run``, which the
+    plans print."""
+    names = (
+        DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    ).names
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [
+                row
+                for values in zip(*(pdf[c] for c in cols))
+                for row in rows(*values)
+            ]
+            yield pd.DataFrame(out, columns=names)
+
+    return df.mapInPandas(run, schema)
 
 
 def spread_to_cores(df: DataFrame) -> DataFrame:

@@ -20,21 +20,22 @@ so the raw-bytes decode is identical) — everything else (C422, C411,
 the magic; they're validated to be empty-or-skippable.
 
 Scale notes: same as the image/audio tiers — payloads are opaque
-``binary`` cells traveling Arrow-batched through iterator
-``mapInPandas``; production source is ``binaryFile`` over the video
-objects; keep binary partitions small (a 128 MB split of raw video is
-a handful of rows — row-group sizing drives parallelism, and at 100 TB
-the decode is embarrassingly parallel per payload).
+``binary`` cells traveling Arrow-batched through
+:func:`.parallel.map_rows`, the one per-row worker; production source
+is ``binaryFile`` over the video objects; keep binary partitions small
+(a 128 MB split of raw video is a handful of rows — row-group sizing
+drives parallelism, and at 100 TB the decode is embarrassingly parallel
+per payload).
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .parallel import map_rows
 
 _MAGIC = b"YUV4MPEG2"
 _FRAME = b"FRAME"
@@ -209,23 +210,13 @@ def video_frames(media: DataFrame) -> DataFrame:
     frame_sample` is the byte-stride plumbing stand-in; this one
     parses a genuine container)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "frame_no": [],
-                "n_bytes": [],
-                "checksum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                for j, frame in enumerate(decode_y4m(payload)["frames"]):
-                    out["doc_id"].append(doc_id)
-                    out["frame_no"].append(j)
-                    out["n_bytes"].append(len(frame))
-                    out["checksum"].append(hashlib.md5(frame).hexdigest())
-            yield pd.DataFrame(out)
+    def rows(doc_id, payload):
+        return [
+            (doc_id, j, len(frame), hashlib.md5(frame).hexdigest())
+            for j, frame in enumerate(decode_y4m(payload)["frames"])
+        ]
 
-    return media.mapInPandas(run, VIDEO_FRAME_SCHEMA)
+    return map_rows(media, ["doc_id", "content"], VIDEO_FRAME_SCHEMA, rows)
 
 
 VIDEO_FRAME_FEATURE_SCHEMA = StructType(
@@ -252,7 +243,7 @@ def video_frame_features(media: DataFrame, every_n: int = 2) -> DataFrame:
     DECODED RGB — exact integer luma stats plus the md5 of the actual
     RGB bytes.  This is the multimodal pipeline composition a real
     corpus build runs (sample frames → featurize/embed per frame);
-    both decode stages live inside one Arrow-batched ``mapInPandas``,
+    both decode stages live inside one Arrow-batched ``map_rows`` pass,
     so there is NO shuffle between video decode and image featurize —
     frame bytes never leave the worker (plan-guarded).
 
@@ -261,30 +252,23 @@ def video_frame_features(media: DataFrame, every_n: int = 2) -> DataFrame:
     downstream feature volume."""
     from .multimodal import decode_image
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_y4m(payload)
-                w, h = d["width"], d["height"]
-                for j in range(0, d["n_frames"], every_n):
-                    y = d["frames"][j][: w * h]  # luma plane
-                    pgm = f"P5\n{w} {h}\n255\n".encode() + y
-                    rgb = decode_image(pgm)
-                    luma = rgb[0::3]
-                    rows.append((
-                        doc_id, j, w, h, w * h,
-                        sum(luma), min(luma), max(luma),
-                        hashlib.md5(rgb).hexdigest(),
-                    ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_no", "width", "height",
-                         "n_pixels", "sum_luma", "min_luma",
-                         "max_luma", "rgb_md5"],
+    def rows(doc_id, payload):
+        d = decode_y4m(payload)
+        w, h = d["width"], d["height"]
+        for j in range(0, d["n_frames"], every_n):
+            y = d["frames"][j][: w * h]  # luma plane
+            pgm = f"P5\n{w} {h}\n255\n".encode() + y
+            rgb = decode_image(pgm)
+            luma = rgb[0::3]
+            yield (
+                doc_id, j, w, h, w * h,
+                sum(luma), min(luma), max(luma),
+                hashlib.md5(rgb).hexdigest(),
             )
 
-    return media.mapInPandas(run, VIDEO_FRAME_FEATURE_SCHEMA)
+    return map_rows(
+        media, ["doc_id", "content"], VIDEO_FRAME_FEATURE_SCHEMA, rows
+    )
 
 
 def video_meta(media: DataFrame) -> DataFrame:
@@ -293,33 +277,18 @@ def video_meta(media: DataFrame) -> DataFrame:
     the derived duration) — every value comes OUT of the parse, so a
     wrong header grammar or frame walk breaks the judged columns."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_y4m(payload)
-                rows.append(
-                    (
-                        doc_id,
-                        d["width"],
-                        d["height"],
-                        d["n_frames"],
-                        d["fps_num"],
-                        d["fps_den"],
-                        d["duration_us"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "n_frames",
-                    "fps_num",
-                    "fps_den",
-                    "duration_us",
-                ],
+    def rows(doc_id, payload):
+        d = decode_y4m(payload)
+        return [
+            (
+                doc_id,
+                d["width"],
+                d["height"],
+                d["n_frames"],
+                d["fps_num"],
+                d["fps_den"],
+                d["duration_us"],
             )
+        ]
 
-    return media.mapInPandas(run, VIDEO_META_SCHEMA)
+    return map_rows(media, ["doc_id", "content"], VIDEO_META_SCHEMA, rows)

@@ -15,14 +15,15 @@ raw-text elements and character references.
 
 Judging discipline (the codec-tier recipe): payloads are synthesized
 in PURE CODEGEN from each document's text (plus deterministic
-constants), decoded in Arrow-batched ``mapInPandas``, and the oracle
+constants), decoded in the Arrow-batched per-row worker
+:func:`.parallel.map_rows`, and the oracle
 replays the decoded result relationally — so a header-walk off-by-one,
 a mis-dechunked body, a tag-stripper that breaks on ``<`` inside
 script, or a wrong entity expansion changes judged values and fails
 the driver hash.
 
 Scale shape: every operator here is a single column-pruned scan →
-one ``mapInPandas`` (no shuffle, no collect); 1-row→N-rows for the
+one ``map_rows`` pass (no shuffle, no collect); 1-row→N-rows for the
 record walk.  At 100 TB the WARC bytes arrive pre-split by file, so
 the per-partition iterator form is the right unit of parallelism.
 """
@@ -31,11 +32,11 @@ from __future__ import annotations
 
 import hashlib
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .parallel import map_rows
 
 __all__ = [
     "as_web_html",
@@ -834,7 +835,7 @@ def decode_html_body(
 
 
 # ---------------------------------------------------------------------------
-# DataFrame operators (Arrow-batched mapInPandas — the codec-tier shape)
+# DataFrame operators (Arrow-batched map_rows — the codec-tier shape)
 # ---------------------------------------------------------------------------
 
 def html_extract(df: DataFrame, html_col: str = "html") -> DataFrame:
@@ -843,18 +844,12 @@ def html_extract(df: DataFrame, html_col: str = "html") -> DataFrame:
     skip + entity decode + whitespace collapse, all from scratch)."""
     schema = "doc_id long, title string, n_blocks long, text string"
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            parsed = [html_text(h) for h in pdf[html_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "title": [p["title"] for p in parsed],
-                "n_blocks": [len(p["blocks"]) for p in parsed],
-                "text": ["\n".join(b[0] for b in p["blocks"])
-                         for p in parsed],
-            })
+    def rows(doc_id, h):
+        p = html_text(h)
+        return [(doc_id, p["title"], len(p["blocks"]),
+                 "\n".join(b[0] for b in p["blocks"]))]
 
-    return df.mapInPandas(run, schema)
+    return map_rows(df, ["doc_id", html_col], schema, rows)
 
 
 def html_main_text(
@@ -870,27 +865,17 @@ def html_main_text(
     schema = ("doc_id long, main_text string, n_kept long, "
               "n_dropped long")
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, h in zip(pdf["doc_id"], pdf[html_col]):
-                blocks = html_text(h)["blocks"]
-                kept = [
-                    b for b in blocks
-                    if b[2] <= max_link_density * b[1]
-                ]
-                rows.append((
-                    doc_id,
-                    "\n".join(b[0] for b in kept),
-                    len(kept),
-                    len(blocks) - len(kept),
-                ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "main_text", "n_kept",
-                               "n_dropped"],
-            )
+    def rows(doc_id, h):
+        blocks = html_text(h)["blocks"]
+        kept = [b for b in blocks if b[2] <= max_link_density * b[1]]
+        return [(
+            doc_id,
+            "\n".join(b[0] for b in kept),
+            len(kept),
+            len(blocks) - len(kept),
+        )]
 
-    return df.mapInPandas(run, schema)
+    return map_rows(df, ["doc_id", html_col], schema, rows)
 
 
 def warc_records(df: DataFrame, warc_col: str = "warc") -> DataFrame:
@@ -902,23 +887,17 @@ def warc_records(df: DataFrame, warc_col: str = "warc") -> DataFrame:
               "target_uri string, content_length long, "
               "payload_md5 string")
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, w in zip(pdf["doc_id"], pdf[warc_col]):
-                for rec_no, rec in enumerate(warc_walk(_warc_bytes(w))):
-                    rows.append((
-                        doc_id, rec_no, rec["warc_type"],
-                        rec["target_uri"], rec["content_length"],
-                        hashlib.md5(rec["payload"]).hexdigest(),
-                    ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "rec_no", "warc_type",
-                               "target_uri", "content_length",
-                               "payload_md5"],
+    def rows(doc_id, w):
+        return [
+            (
+                doc_id, rec_no, rec["warc_type"],
+                rec["target_uri"], rec["content_length"],
+                hashlib.md5(rec["payload"]).hexdigest(),
             )
+            for rec_no, rec in enumerate(warc_walk(_warc_bytes(w)))
+        ]
 
-    return df.mapInPandas(run, schema)
+    return map_rows(df, ["doc_id", warc_col], schema, rows)
 
 
 def warc_main_text(
@@ -935,36 +914,22 @@ def warc_main_text(
     schema = ("doc_id long, status long, n_words long, n_chars long, "
               "main_text string")
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, w in zip(pdf["doc_id"], pdf[warc_col]):
-                responses = [
-                    r for r in warc_walk(_warc_bytes(w))
-                    if r["warc_type"] == "response"
-                ]
-                for rec in responses:
-                    status, headers, body = http_response(rec["payload"])
-                    body = decode_content_encoding(body, headers)
-                    text, _cs = decode_html_body(
-                        body, headers.get("content-type")
-                    )
-                    blocks = html_text(text)["blocks"]
-                    kept = [
-                        b for b in blocks
-                        if b[2] <= max_link_density * b[1]
-                    ]
-                    main = "\n".join(b[0] for b in kept)
-                    rows.append((
-                        doc_id, status, len(main.split()), len(main),
-                        main,
-                    ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "status", "n_words",
-                               "n_chars", "main_text"],
-            )
+    def rows(doc_id, w):
+        # the whole WARC is walked before any response is parsed
+        responses = [
+            r for r in warc_walk(_warc_bytes(w))
+            if r["warc_type"] == "response"
+        ]
+        for rec in responses:
+            status, headers, body = http_response(rec["payload"])
+            body = decode_content_encoding(body, headers)
+            text, _cs = decode_html_body(body, headers.get("content-type"))
+            blocks = html_text(text)["blocks"]
+            kept = [b for b in blocks if b[2] <= max_link_density * b[1]]
+            main = "\n".join(b[0] for b in kept)
+            yield (doc_id, status, len(main.split()), len(main), main)
 
-    return df.mapInPandas(run, schema)
+    return map_rows(df, ["doc_id", warc_col], schema, rows)
 
 
 def warc_main_text_robust(
@@ -990,17 +955,12 @@ def warc_main_text_robust(
     schema = ("doc_id long, status long, charset string, "
               "error_class string, n_words long, n_chars long, "
               "main_text string, error string")
-    cols = ["doc_id", "status", "charset", "error_class",
-            "n_words", "n_chars", "main_text", "error"]
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, w in zip(pdf["doc_id"], pdf[warc_col]):
-                rows += robust_rows(doc_id, w, max_link_density)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(run, schema)
+    return map_rows(
+        df,
+        ["doc_id", warc_col],
+        schema,
+        lambda doc_id, w: robust_rows(doc_id, w, max_link_density),
+    )
 
 
 def _warc_bytes(w) -> bytes:
@@ -1260,19 +1220,12 @@ def as_warc_content_encoded(
     cannot ride a utf-8 string, so this fixture synthesizes in the
     same Arrow-batched worker pass that the decoder consumes (still
     one scan → map stages, zero shuffle, zero driver involvement)."""
-    schema = "doc_id long, warc binary"
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "warc": [
-                    _encoded_warc_bytes(int(d), t)
-                    for d, t in zip(pdf["doc_id"], pdf[text_col])
-                ],
-            })
-
-    return docs.select("doc_id", text_col).mapInPandas(run, schema)
+    return map_rows(
+        docs.select("doc_id", text_col),
+        ["doc_id", text_col],
+        "doc_id long, warc binary",
+        lambda d, t: [(d, _encoded_warc_bytes(int(d), t))],
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -159,6 +159,30 @@ def stream_stateful_dedup_e2e(spark, sf_dir):
     return spark.read.parquet(outdir).select(*_EVENT_COLS)
 
 
+def _decode_at_ingest(spark, sf_dir, name: str, decode):
+    """The decode-at-ingest scaffold: land ``documents`` as two parquet
+    files (odd ids, then even ids), stream them one file per trigger
+    through ``decode`` into parquet, and read the output back."""
+    work = _workdir(sf_dir, name)
+    landing = os.path.join(work, "arrivals")
+    docs = t(spark, sf_dir, "documents")
+    # complements by filter, not subtract: EXCEPT DISTINCT shuffles
+    # the whole table and silently dedups rows (review r14)
+    docs.filter(F.col("doc_id") % 2 != 0).coalesce(1).write.parquet(landing)
+    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
+        "append"
+    ).parquet(landing)
+
+    stream = (
+        spark.readStream.schema(schemas.DOCUMENTS)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+    )
+    outdir = os.path.join(work, "out")
+    _run_to_parquet(decode(stream), outdir, os.path.join(work, "ckpt"))
+    return spark.read.parquet(outdir)
+
+
 _MEDIA_ORACLE = """
     SELECT doc_id,
            CAST(32 AS BIGINT) AS n_bytes,
@@ -174,7 +198,7 @@ def stream_media_features_e2e(spark, sf_dir):
     (``maxFilesPerTrigger=1``), each batch is turned into REAL binary
     WAV payloads (``as_wav`` — pure codegen, so it composes with a
     streaming DataFrame) and pushed through the from-scratch RIFF
-    decoder via Arrow-batched ``mapInPandas`` inside the live
+    decoder via the Arrow-batched ``map_rows`` worker inside the live
     StreamingQuery; the sink must equal the batch decode — md5 over
     the DECODED PCM of every document, exactly once.
 
@@ -186,31 +210,14 @@ def stream_media_features_e2e(spark, sf_dir):
     ingestion, which is how a 100 TB corpus would actually be decoded:
     at ingest, incrementally, not as a monolithic batch rescan."""
     from ..operators.audio import extract_pcm_features
-
-    work = _workdir(sf_dir, "media_features")
-    landing = os.path.join(work, "arrivals")
-    docs = t(spark, sf_dir, "documents")
-    # complements by filter, not subtract: EXCEPT DISTINCT shuffles
-    # the whole table and silently dedups rows (review r14)
-    docs.filter(F.col("doc_id") % 2 != 0).coalesce(1).write.parquet(landing)
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(landing)
-
-    stream = (
-        spark.readStream.schema(schemas.DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
     from ..operators.multimodal import as_wav
 
-    outdir = os.path.join(work, "out")
-    _run_to_parquet(
-        extract_pcm_features(as_wav(stream)),
-        outdir,
-        os.path.join(work, "ckpt"),
+    return _decode_at_ingest(
+        spark,
+        sf_dir,
+        "media_features",
+        lambda stream: extract_pcm_features(as_wav(stream)),
     )
-    return spark.read.parquet(outdir)
 
 
 _SSJOIN_ORACLE = """
@@ -489,7 +496,7 @@ def stream_web_ingest_e2e(spark, sf_dir):
     (``maxFilesPerTrigger=1``), each batch synthesizes its eight-lane
     WARC fixture in pure codegen (so it composes with a streaming
     DataFrame) and decodes through ``warc_main_text_robust``'s
-    Arrow-batched ``mapInPandas`` under checkpointed exactly-once file
+    Arrow-batched ``map_rows`` worker under checkpointed exactly-once file
     ingestion.  The sink must equal the batch decode — the decoded
     mojibake markers AND the quarantine rows, exactly once per
     document.  This is how a 100 TB crawl is actually processed:
@@ -501,26 +508,14 @@ def stream_web_ingest_e2e(spark, sf_dir):
     text-side decode tier)."""
     from ..operators import web as W
 
-    work = _workdir(sf_dir, "web_ingest")
-    landing = os.path.join(work, "arrivals")
-    docs = t(spark, sf_dir, "documents")
-    docs.filter(F.col("doc_id") % 2 != 0).coalesce(1).write.parquet(landing)
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(landing)
-
-    stream = (
-        spark.readStream.schema(schemas.DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+    return _decode_at_ingest(
+        spark,
+        sf_dir,
+        "web_ingest",
+        lambda stream: W.warc_main_text_robust(W.as_warc_mixed(stream)).drop(
+            "error"
+        ),
     )
-    outdir = os.path.join(work, "out")
-    _run_to_parquet(
-        W.warc_main_text_robust(W.as_warc_mixed(stream)).drop("error"),
-        outdir,
-        os.path.join(work, "ckpt"),
-    )
-    return spark.read.parquet(outdir)
 
 
 def _bind_web_oracle() -> None:

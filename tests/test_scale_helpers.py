@@ -246,3 +246,63 @@ def test_wide_ancestored_sees_shuffles_inside_subqueries(spark):
     top = docs.groupBy().agg(F.max("doc_id")).scalar()
     assert not _wide_ancestored(docs)
     assert _wide_ancestored(docs.filter(F.col("doc_id") == top))
+
+
+def test_map_rows_matches_python_expansion(spark):
+    """``map_rows`` emits 0, 1 or 2 tuples per row, over three input
+    partitions of which one is empty, and equals the Python expansion."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from etl_pulumi_aws_snowflake_spark.operators.parallel import map_rows
+
+    df = spark.range(0, 6, numPartitions=3).filter(F.col("id") >= 2)
+    assert df.rdd.glom().map(len).collect() == [0, 2, 2]
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("j", LongType()),
+            StructField("tag", StringType()),
+        ]
+    )
+
+    def rows(i):
+        for j in range(i % 3):
+            yield (i, j, f"r{i}.{j}")
+
+    got = sorted(tuple(r) for r in map_rows(df, ["id"], schema, rows).collect())
+    want = sorted(t for i in range(2, 6) for t in rows(i))
+    assert got == want
+    assert len(want) == 5
+
+
+def test_map_rows_all_empty_batch_is_typed(spark):
+    """Batches whose rows all emit nothing return the typed empty
+    result: the schema's names and types, here from a DDL string."""
+    from pyspark.sql.types import BinaryType, LongType, StringType
+
+    from etl_pulumi_aws_snowflake_spark.operators.parallel import map_rows
+
+    df = spark.range(0, 4, numPartitions=2)
+    out = map_rows(df, ["id"], "k long, tag string, payload binary",
+                   lambda i: [])
+    assert out.collect() == []
+    assert [(f.name, f.dataType) for f in out.schema.fields] == [
+        ("k", LongType()),
+        ("tag", StringType()),
+        ("payload", BinaryType()),
+    ]
+
+
+def test_map_rows_surfaces_row_errors(spark):
+    """An exception raised inside ``rows`` fails the action with its
+    own message."""
+    from etl_pulumi_aws_snowflake_spark.operators.parallel import map_rows
+
+    def rows(i):
+        if i == 3:
+            raise ValueError(f"map_rows probe: row {i} is malformed")
+        return [(i,)]
+
+    df = spark.range(0, 4, numPartitions=1)
+    with pytest.raises(Exception, match="map_rows probe: row 3 is malformed"):
+        map_rows(df, ["id"], "id long", rows).collect()
